@@ -864,6 +864,7 @@ def main() -> None:
                 "unit": "sec",
                 "sf": compact["sf"],
                 "headline_load": headline_loads,
+                "headline_block": compact["headline_block"],
             }
         )
     print(line)

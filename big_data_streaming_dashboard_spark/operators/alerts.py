@@ -16,9 +16,8 @@ buckets per cooldown key, keeping the earliest alert per (key, bucket)
 last-emit-time semantics (an alert 29 s after one that was itself
 suppressed IS emitted by the reference) is inherently sequential per
 key; the streaming layer implements it faithfully with
-transformWithStateInPandas / applyInPandasWithState
-(streaming/stateful.py); this bucketed version is the scalable batch
-approximation and is documented as such.
+applyInPandasWithState (streaming/stateful.py); this bucketed version
+is the scalable batch approximation and is documented as such.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Serving layer (SURVEY.md S12-S14, F7, W9, A4).
+"""Serving layer (SURVEY.md S12-S13, F7, W9).
 
 The reference's backend consumes normal+critical Kafka topics, tags
 ``data_priority``, and fans records out to WebSocket clients
@@ -11,12 +11,15 @@ Spark-side equivalents:
 - ``client_sanity_filter`` - F5 defense-in-depth re-validation
 - ``DashboardState``   - a foreachBatch sink maintaining the gold
   in-memory snapshot the dashboard reads: recent points (W8 cap),
-  rolling stats (W9/A1), connected-client style gauges (A4). The
-  aggregation runs IN SPARK per micro-batch; only the bounded
-  top-2000 snapshot crosses to the driver (the reference ships every
-  record to every browser and aggregates client-side -- our dashboard
-  reads materialized results instead, SURVEY.md section 3.3).
-- ``health``           - S14's {status, connected_clients} shape
+  rolling stats (W9/A1). The aggregation runs IN SPARK per
+  micro-batch; only the bounded top-2000 snapshot crosses to the
+  driver (the reference ships every record to every browser and
+  aggregates client-side -- our dashboard reads materialized results
+  instead, SURVEY.md section 3.3).
+
+The push hop itself -- the `/ws` hub, its S14 `/health` gauge
+{status, connected_clients} and the foreachBatch sink -- lives in
+``streaming/ws.py``.
 """
 
 from __future__ import annotations
@@ -69,7 +72,6 @@ class DashboardState:
         self.cfg = cfg
         self.recent: list[dict[str, Any]] = []
         self.stats: dict[str, Any] = {}
-        self.clients = 0  # A4 gauge; a real server increments per socket
         self.batches_seen = 0
         self._schema = None
 
@@ -98,7 +100,3 @@ class DashboardState:
             self.batches_seen += 1
         finally:
             snap.unpersist()
-
-    def health(self) -> dict[str, Any]:
-        """S14: GET /health shape (backend/main.py:112-114)."""
-        return {"status": "healthy", "connected_clients": self.clients}

@@ -17,11 +17,7 @@ cells), and AQE skew handling covers hot cells.
 
 Streaming form: ``applyInPandasWithState`` keeps last-emit per key in
 the state store across micro-batches (GroupState timeout NoTimeout --
-the reference's state never expires either). A second streaming form
-uses Spark 4's ``transformWithStateInPandas`` (StatefulProcessor +
-ValueState on the RocksDB state store) -- the successor API: typed
-state variables, optional TTL, and timer support, which is where a
-production deployment would hang state-expiry policies.
+the reference's state never expires either).
 """
 
 from __future__ import annotations
@@ -125,58 +121,3 @@ def exact_cooldown_stream(
         )
     )
 
-
-def exact_cooldown_tws(
-    candidates: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """Streaming exact cooldown on Spark 4's transformWithStateInPandas.
-
-    Same semantics as ``exact_cooldown_stream`` (last-emit carried per
-    key across micro-batches) on the successor stateful API: a
-    ``StatefulProcessor`` with a named ``ValueState`` variable.
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) AND the
-    ``protobuf`` package (the TWS state-server protocol is protobuf;
-    pyspark only pulls it in via the ``connect`` extra). The test is
-    skipped where protobuf is absent; ``exact_cooldown_stream`` is the
-    container-runnable form with identical semantics.
-
-    The processor class is defined *locally* so cloudpickle serializes
-    it by value -- Spark's Python workers do not have this repo on
-    their PYTHONPATH (see the self-containment note above).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    scan = _make_scan(float(cfg.alert_cooldown_seconds))
-    cols = list(_COLS)
-    state_schema = "last_emit_epoch double"
-
-    class _Cooldown(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last_emit", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._last.get()
-            last_emit = got[0] if got is not None else None
-            batch = pd.concat(list(rows))
-            out, last_emit = scan(batch, last_emit)
-            if last_emit is not None:
-                self._last.update((float(last_emit),))
-            yield out[cols]
-
-        def close(self) -> None:
-            pass
-
-    return (
-        candidates.select(*_COLS)
-        .groupBy("cooldown_key")
-        .transformWithStateInPandas(
-            statefulProcessor=_Cooldown(),
-            outputStructType=COOLDOWN_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    )

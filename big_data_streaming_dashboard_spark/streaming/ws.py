@@ -1,29 +1,30 @@
-"""WebSocket push serving: the reference backend's LITERAL protocol.
+"""WebSocket push serving: the reference backend's `/ws` broadcast
+(backend/main.py:53-106) as a foreachBatch sink.
 
-The reference serves `/ws` (backend/main.py:53-63) and broadcasts each
-Kafka record as a JSON text message with a `data_priority` tag
-(backend/main.py:90-99). streaming/push.py covers those semantics over
-SSE; this module closes the remaining protocol gap with a stdlib
-RFC 6455 server -- no websocket library in the container, and none is
-needed for a server->client broadcast:
+The reference serves `/ws` and broadcasts each Kafka record as a JSON
+text message with a `data_priority` tag (backend/main.py:90-99). This
+module is that last hop: a stdlib RFC 6455 hub -- no websocket library
+in the container, and none is needed for a server->client broadcast --
+plus the foreachBatch sink that feeds it.
 
 - handshake: HTTP/1.1 101 with Sec-WebSocket-Accept =
   base64(sha1(Sec-WebSocket-Key + GUID))  (RFC 6455 section 4.2.2)
 - data: FIN text frames (opcode 0x1), server->client frames unmasked
   (section 5.1), 7/16/64-bit payload-length encoding (section 5.2)
 
-Backpressure/eviction mirror SSEBroadcaster exactly: bounded
-drop-oldest per-client queues, idle timeout, copy-on-iterate fan-out,
-and the same `/health` gauge (S14). The foreachBatch sink is the
-transport-agnostic `push.sse_foreach_batch` (it only needs
-`.broadcast(list[str])`), re-exported here as `ws_foreach_batch` --
-including its W8-shaped cap on the per-batch driver materialization.
-
 The broadcast loop is write-only like the reference's (`send_text` in
 a loop; disconnects are discovered as write failures and the client
 is dropped -- backend/main.py:65-71). Client ping/close frames are
 therefore not parsed; a stalled or closed peer is reclaimed by the
-write failure or the idle timeout.
+write failure or the idle timeout. `/health` returns the S14 gauge
+{status, connected_clients} (backend/main.py:112-114).
+
+Scale note: everything upstream is Spark; the per-batch collect()
+ships only the routed/alert serving stream and is capped at the W8
+retention size (ws_foreach_batch.max_rows_per_batch -- a catch-up
+batch after downtime would otherwise be an unbounded driver
+materialization). Per-client queues are bounded drop-oldest, so one
+stalled browser can't hold the hub's memory.
 """
 
 from __future__ import annotations
@@ -37,7 +38,10 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 
-from .push import sse_foreach_batch as ws_foreach_batch  # noqa: F401
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from .serving import priority_tag
 
 _WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 
@@ -61,12 +65,31 @@ def text_frame(payload: bytes) -> bytes:
     return header + payload
 
 
+def _offer(q: queue.Queue, item: Any) -> int:
+    """Enqueue without blocking, evicting the oldest entries until the
+    item fits; returns how many were evicted. A stalled client's queue
+    is full and never drains (its handler is wedged in a socket
+    write), so a blocking put would wedge the hub, and a blocking
+    shutdown sentinel would deadlock stop()."""
+    evicted = 0
+    while True:
+        try:
+            q.put_nowait(item)
+            return evicted
+        except queue.Full:
+            try:
+                q.get_nowait()
+                evicted += 1
+            except queue.Empty:
+                pass
+
+
 class WebSocketBroadcaster:
-    """Stdlib `/ws` hub with the same client-management contract as
-    SSEBroadcaster: GET /ws upgrades and streams JSON text frames,
+    """Stdlib `/ws` hub: GET /ws upgrades and streams JSON text frames,
     GET /health returns the S14 gauge, each client owns a bounded
     drop-oldest queue, and fan-out iterates a snapshot of the client
-    list so disconnects never stall the loop."""
+    list so disconnects never stall the loop (the reference's
+    copy-on-iterate)."""
 
     def __init__(
         self,
@@ -75,6 +98,13 @@ class WebSocketBroadcaster:
         max_queue_frames: int = 256,
         client_idle_timeout: float = 60.0,
     ) -> None:
+        # A stalled client holds at most max_queue_frames of backlog:
+        # newer frames evict the oldest (a live dashboard wants the
+        # newest state, same reason W8 keeps the newest 2000);
+        # dropped_frames counts evictions. client_idle_timeout evicts a
+        # client whose queue stays empty that long -- with pipeline
+        # heartbeats flowing, an empty queue means the hub stopped
+        # serving this client.
         self._clients: dict[int, queue.Queue] = {}
         self._lock = threading.Lock()
         self._next_id = 0
@@ -164,16 +194,7 @@ class WebSocketBroadcaster:
         with self._lock:
             targets = list(self._clients.values())
         for q in targets:
-            while True:
-                try:
-                    q.put_nowait(frames)
-                    break
-                except queue.Full:  # drop-oldest, never block the hub
-                    try:
-                        q.get_nowait()
-                        self.dropped_frames += 1
-                    except queue.Empty:
-                        pass
+            self.dropped_frames += _offer(q, frames)
 
     def heartbeat(self) -> None:
         """The keep-alive message clients drop (F7, useWebsocket.js:42-44)."""
@@ -184,20 +205,39 @@ class WebSocketBroadcaster:
             targets = list(self._clients.values())
             self._clients.clear()
         for q in targets:
-            # NON-blocking sentinel delivery: a stalled client's queue
-            # is full and never drains (its handler is wedged in a
-            # socket write), so a blocking put(None) deadlocks
-            # shutdown -- found by the backpressure soak test. Evict
-            # oldest frames until the sentinel fits, same drop-oldest
-            # contract as broadcast().
-            while True:
-                try:
-                    q.put_nowait(None)
-                    break
-                except queue.Full:
-                    try:
-                        q.get_nowait()
-                    except queue.Empty:
-                        pass
+            _offer(q, None)
         self._server.shutdown()
         self._server.server_close()
+
+
+def ws_foreach_batch(hub: WebSocketBroadcaster, max_rows_per_batch: int = 2000):
+    """S12 sink: each micro-batch of the serving stream is serialized
+    to one JSON object per record (`data_priority` tagged like
+    backend/main.py:92-97 when the batch carries a `critical` column)
+    and fanned out to every connected client.
+
+    The driver-side materialization is CAPPED at max_rows_per_batch
+    (default = W8's 2000-point retention): a steady-state trigger
+    batch is far smaller, but a catch-up batch after downtime is
+    unbounded, and an unbounded collect() is a driver OOM. The cap
+    keeps the NEWEST rows by event time (TakeOrderedAndProject --
+    per-partition heaps, no global sort), matching what a live
+    dashboard can display anyway; older catch-up rows are superseded
+    state, same semantics as recent_points. Pair with
+    maxOffsetsPerTrigger / maxFilesPerTrigger on the source to bound
+    the batch before it reaches the sink.
+    """
+
+    def fn(batch: DataFrame, epoch_id: int) -> None:
+        df = priority_tag(batch) if "critical" in batch.columns else batch
+        order = [F.col(c).desc() for c in ("timestamp", "event_id") if c in df.columns]
+        if order:
+            df = df.orderBy(*order)
+        rows = (
+            df.limit(max_rows_per_batch)
+            .select(F.to_json(F.struct(*df.columns)).alias("j"))
+            .collect()
+        )
+        hub.broadcast([r["j"] for r in rows])
+
+    return fn

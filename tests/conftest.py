@@ -116,68 +116,70 @@ def compare_spark_duck(spark_df, duck_con, sql, limit_diff=8):
 #      retriever, retention replay -- see the durations ledger in
 #      OPTIMIZATION_r19.md). Every family named here retains at least
 #      one fast test; the slow tier runs them all via `-m slow`.
+# Keys are full node ids (relative to the repo root, where pytest.ini
+# pins rootdir), so a same-named test in another file stays fast.
 _SLOW_BY_NODE = {
-    "test_compact_serving_index_preserves_probes",
-    "test_probe_dedup_ttl_matches_unbounded_state",
-    "test_streaming_ivfpq_topk_composes_the_family_rules",
-    "test_rag_endpoints_serve_from_ivfpq_index",
-    "test_streaming_split_cadence_closes_straddle",
-    "test_streaming_pq_topk_matches_batch",
-    "test_streaming_anomaly_delayed_matches_batch_under_shuffled_replay",
-    "test_streaming_curation_append_equals_rebuild",
-    "test_streaming_pq_append_equals_frozen_model_rebuild",
-    "test_streaming_funnel_matches_batch_under_reverse_replay",
-    "test_streaming_split_assignment_is_batching_invariant",
-    "test_streaming_ivfpq_append_encodes_under_both_frozen_models",
-    "test_streaming_split_append_equals_rebuild",
-    "test_containment_probe_merged_df_cap_across_appends",
-    "test_streaming_curation_full_matches_batch",
-    "test_compact_then_probe_parity_all_kinds[ivfpq]",
-    "test_streaming_curation_compact_preserves_verdicts",
-    "test_streaming_split_matches_batch",
-    "test_streaming_drift_matches_batch",
-    "test_empty_artifact_dim_probes_refuse_loudly",
-    "test_compact_then_probe_parity_all_kinds[pq]",
-    "test_bm25_torn_artifact_refuses_at_probe",
-    "test_streaming_anomaly_verdicts_match_batch",
-    "test_streaming_quant_topk_matches_python_cascade[2]",
-    "test_streaming_temporal_annotated_rejoin_matches_batch",
-    "test_streaming_quant_topk_matches_python_cascade[8]",
-    "test_streaming_matryoshka_append_is_premise_free",
-    "test_streaming_split_new_docs_inherit_and_colink",
-    "test_hybrid_rrf_fixed_query_serves_from_ann_index",
-    "test_compact_then_probe_parity_all_kinds[bm25]",
-    "test_empty_centroids_refuse_at_probe_construction",
-    "test_streaming_pq_append_guards_refuse_loudly",
-    "test_neardup_probe_merged_bucket_cap_across_appends",
-    "test_streaming_hybrid_keyword_dual_pin_guards_both_artifacts",
-    "test_semantic_replay_duplicates_are_verdict_benign",
-    "test_streaming_split_small_graph_path_matches_distributed",
-    "test_compact_then_probe_parity_all_kinds[ivfmat]",
-    "test_streaming_bm25_append_equals_rebuild",
-    "test_streaming_ivf_topk_matches_batch_multiprobe",
-    "test_streaming_hybrid_rrf_matches_batch",
-    "test_streaming_ivf_matryoshka_matches_python_cascade[8-2]",
-    "test_streaming_hybrid_index_refresh_fails_loudly",
-    "test_compact_then_probe_parity_all_kinds[ivf]",
-    "test_ivf_matryoshka_guards_refuse_loudly",
-    "test_ivf_quant_guards_and_retriever_dispatch",
-    "test_compact_then_probe_parity_all_kinds[ann]",
-    "test_banded_append_verifies_knobs_against_stamp",
-    "test_serving_index_build_knob_guards",
-    "test_streaming_ivf_append_assigns_frozen_nearest_cell",
-    "test_streaming_bm25_matches_batch_for_arbitrary_queries",
+    "tests/test_streaming.py::test_compact_serving_index_preserves_probes",
+    "tests/test_streaming.py::test_probe_dedup_ttl_matches_unbounded_state",
+    "tests/test_streaming.py::test_streaming_ivfpq_topk_composes_the_family_rules",
+    "tests/test_streaming.py::test_rag_endpoints_serve_from_ivfpq_index",
+    "tests/test_streaming.py::test_streaming_split_cadence_closes_straddle",
+    "tests/test_streaming.py::test_streaming_pq_topk_matches_batch",
+    "tests/test_streaming.py::test_streaming_anomaly_delayed_matches_batch_under_shuffled_replay",
+    "tests/test_streaming.py::test_streaming_curation_append_equals_rebuild",
+    "tests/test_streaming.py::test_streaming_pq_append_equals_frozen_model_rebuild",
+    "tests/test_streaming.py::test_streaming_funnel_matches_batch_under_reverse_replay",
+    "tests/test_streaming.py::test_streaming_split_assignment_is_batching_invariant",
+    "tests/test_streaming.py::test_streaming_ivfpq_append_encodes_under_both_frozen_models",
+    "tests/test_streaming.py::test_streaming_split_append_equals_rebuild",
+    "tests/test_streaming.py::test_containment_probe_merged_df_cap_across_appends",
+    "tests/test_streaming.py::test_streaming_curation_full_matches_batch",
+    "tests/test_streaming.py::test_compact_then_probe_parity_all_kinds[ivfpq]",
+    "tests/test_streaming.py::test_streaming_curation_compact_preserves_verdicts",
+    "tests/test_streaming.py::test_streaming_split_matches_batch",
+    "tests/test_streaming.py::test_streaming_drift_matches_batch",
+    "tests/test_streaming.py::test_empty_artifact_dim_probes_refuse_loudly",
+    "tests/test_streaming.py::test_compact_then_probe_parity_all_kinds[pq]",
+    "tests/test_streaming.py::test_bm25_torn_artifact_refuses_at_probe",
+    "tests/test_streaming.py::test_streaming_anomaly_verdicts_match_batch",
+    "tests/test_streaming.py::test_streaming_quant_topk_matches_python_cascade[2]",
+    "tests/test_streaming.py::test_streaming_temporal_annotated_rejoin_matches_batch",
+    "tests/test_streaming.py::test_streaming_quant_topk_matches_python_cascade[8]",
+    "tests/test_streaming.py::test_streaming_matryoshka_append_is_premise_free",
+    "tests/test_streaming.py::test_streaming_split_new_docs_inherit_and_colink",
+    "tests/test_streaming.py::test_hybrid_rrf_fixed_query_serves_from_ann_index",
+    "tests/test_streaming.py::test_compact_then_probe_parity_all_kinds[bm25]",
+    "tests/test_streaming.py::test_empty_centroids_refuse_at_probe_construction",
+    "tests/test_streaming.py::test_streaming_pq_append_guards_refuse_loudly",
+    "tests/test_streaming.py::test_neardup_probe_merged_bucket_cap_across_appends",
+    "tests/test_streaming.py::test_streaming_hybrid_keyword_dual_pin_guards_both_artifacts",
+    "tests/test_streaming.py::test_semantic_replay_duplicates_are_verdict_benign",
+    "tests/test_streaming.py::test_streaming_split_small_graph_path_matches_distributed",
+    "tests/test_streaming.py::test_compact_then_probe_parity_all_kinds[ivfmat]",
+    "tests/test_streaming.py::test_streaming_bm25_append_equals_rebuild",
+    "tests/test_streaming.py::test_streaming_ivf_topk_matches_batch_multiprobe",
+    "tests/test_streaming.py::test_streaming_hybrid_rrf_matches_batch",
+    "tests/test_streaming.py::test_streaming_ivf_matryoshka_matches_python_cascade[8-2]",
+    "tests/test_streaming.py::test_streaming_hybrid_index_refresh_fails_loudly",
+    "tests/test_streaming.py::test_compact_then_probe_parity_all_kinds[ivf]",
+    "tests/test_streaming.py::test_ivf_matryoshka_guards_refuse_loudly",
+    "tests/test_streaming.py::test_ivf_quant_guards_and_retriever_dispatch",
+    "tests/test_streaming.py::test_compact_then_probe_parity_all_kinds[ann]",
+    "tests/test_streaming.py::test_banded_append_verifies_knobs_against_stamp",
+    "tests/test_streaming.py::test_serving_index_build_knob_guards",
+    "tests/test_streaming.py::test_streaming_ivf_append_assigns_frozen_nearest_cell",
+    "tests/test_streaming.py::test_streaming_bm25_matches_batch_for_arbitrary_queries",
     # test_ann brute-force recall A/Bs (37.6 / 30.2 / 28.6 s): the
     # emb family's output correctness stays fast-covered by the
     # window oracle rows (emb_ivf_recall / emb_pq_recall / emb_kmeans)
     # and the vec-attach gate test
-    "test_neardup_banded_recall_vs_exact",
-    "test_pq_topk_recall",
-    "test_pq_recall_matches_independent_computation",
+    "tests/test_ann.py::test_neardup_banded_recall_vs_exact",
+    "tests/test_ann.py::test_pq_topk_recall",
+    "tests/test_ann.py::test_pq_recall_matches_independent_computation",
 }
 
 
 def pytest_collection_modifyitems(config, items):
     for item in items:
-        if item.nodeid.split("::")[-1] in _SLOW_BY_NODE:
+        if item.nodeid in _SLOW_BY_NODE:
             item.add_marker(pytest.mark.slow)

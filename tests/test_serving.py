@@ -53,7 +53,6 @@ def test_dashboard_state_foreach_batch(spark, tmp_path):
     assert len(state.recent) == min(n_valid, 2000)
     assert state.stats["total_points"] == len(state.recent)
     assert state.stats["high_count"] == state.stats["dangerous_points"]
-    assert state.health() == {"status": "healthy", "connected_clients": 0}
 
 
 def test_observed_metrics_streaming(spark, tmp_path):
@@ -102,171 +101,6 @@ def test_csv_bronze_source(spark, tmp_path):
     silver = validate_enrich(bronze.withColumn("event_id", F.monotonically_increasing_id()))
     got = sorted((r["status"], r["error"]) for r in silver.collect())
     assert got == [("invalid", "Invalid latitude: 95.0"), ("valid", None)]
-
-
-def test_sse_push_foreach_batch_end_to_end(spark, tmp_path):
-    """S12 push serving, end to end: a real streaming query fans each
-    micro-batch out to two connected SSE clients; both receive every
-    routed record as JSON with the data_priority tag, the health
-    gauge counts them (S14), and heartbeats arrive as droppable
-    type-frames (F7)."""
-    import http.client
-    import json as _json
-    import threading
-    import time
-
-    from big_data_streaming_dashboard_spark.streaming.push import (
-        SSEBroadcaster,
-        sse_foreach_batch,
-    )
-    from big_data_streaming_dashboard_spark.tables import bronze_radiation
-
-    bronze = bronze_radiation(spark, "/root/testdata/sf0.001").limit(80)
-    src = str(tmp_path / "bronze")
-    bronze.coalesce(2).write.parquet(src)
-    expected = (
-        validate_enrich(spark.read.parquet(src))
-        .filter(F.col("status") == "valid")
-        .count()
-    )
-    assert expected > 0
-
-    hub = SSEBroadcaster()
-    host, port = hub.start()
-
-    def reader(out):
-        conn = http.client.HTTPConnection(host, port, timeout=30)
-        conn.request("GET", "/events")
-        resp = conn.getresponse()
-        while len([m for m in out if m.get("type") != "heartbeat"]) < expected:
-            line = resp.fp.readline()
-            if not line:
-                break
-            if line.startswith(b"data: "):
-                out.append(_json.loads(line[6:].decode()))
-        conn.close()
-
-    got_a, got_b = [], []
-    threads = [
-        threading.Thread(target=reader, args=(buf,), daemon=True)
-        for buf in (got_a, got_b)
-    ]
-    for t in threads:
-        t.start()
-    deadline = time.time() + 10
-    while hub.n_clients < 2 and time.time() < deadline:
-        time.sleep(0.05)
-    assert hub.health() == {"status": "healthy", "connected_clients": 2}
-
-    hub.heartbeat()  # F7: a droppable type-frame before real data
-    silver = validate_enrich(stream_parquet_bronze(spark, src)).filter(
-        F.col("status") == "valid"
-    )
-    q = (
-        silver.writeStream.foreachBatch(sse_foreach_batch(hub))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    for t in threads:
-        t.join(timeout=30)
-
-    for got in (got_a, got_b):
-        data = [m for m in got if m.get("type") != "heartbeat"]
-        assert len(data) == expected
-        # S12 tag + payload fields survive the JSON hop
-        assert all(m["data_priority"] in ("critical", "normal") for m in data)
-        assert all("value" in m and "level" in m for m in data)
-    # both clients saw the heartbeat frame the frontend drops
-    assert any(m.get("type") == "heartbeat" for m in got_a)
-
-    hub.stop()
-    deadline = time.time() + 5
-    while hub.n_clients and time.time() < deadline:
-        time.sleep(0.05)
-    assert hub.n_clients == 0
-
-
-def test_sse_batch_collect_capped(spark):
-    """An oversized (catch-up) micro-batch must not materialize fully
-    on the driver: the sink caps at max_rows_per_batch keeping the
-    NEWEST rows by (timestamp, event_id) -- the W8 retention shape."""
-    from big_data_streaming_dashboard_spark.streaming.push import (
-        sse_foreach_batch,
-    )
-
-    class FakeHub:
-        def __init__(self):
-            self.payloads = []
-
-        def broadcast(self, payloads):
-            self.payloads.extend(payloads)
-
-    big = spark.range(5000).select(
-        F.col("id").alias("event_id"),
-        F.date_format(
-            F.timestamp_seconds(F.lit(1700000000) + F.col("id")),
-            "yyyy-MM-dd HH:mm:ss",
-        ).alias("timestamp"),
-        F.lit(1.0).alias("value"),
-    )
-    hub = FakeHub()
-    sse_foreach_batch(hub, tag_priority=False, max_rows_per_batch=100)(big, 0)
-    assert len(hub.payloads) == 100
-    import json as _json
-
-    ids = sorted(_json.loads(p)["event_id"] for p in hub.payloads)
-    assert ids == list(range(4900, 5000))  # newest 100 survive the cap
-
-
-def test_sse_client_queue_drop_oldest():
-    """A stalled client's queue is bounded: newer frames evict the
-    oldest (dropped_frames counts them) instead of growing without
-    bound or blocking the broadcast loop."""
-    import queue as _queue
-
-    from big_data_streaming_dashboard_spark.streaming.push import (
-        SSEBroadcaster,
-    )
-
-    hub = SSEBroadcaster(max_queue_frames=4)
-    q = _queue.Queue(maxsize=4)
-    hub._clients[0] = q  # stalled client: nothing drains the queue
-    for i in range(10):
-        hub.broadcast([f'{{"i": {i}}}'])
-    assert q.qsize() == 4
-    assert hub.dropped_frames == 6
-    kept = [q.get_nowait() for _ in range(4)]
-    assert kept[-1] == b'data: {"i": 9}\n\n'  # newest survive
-    assert kept[0] == b'data: {"i": 6}\n\n'
-
-
-def test_sse_idle_client_evicted():
-    """A client whose queue stays empty past client_idle_timeout is
-    disconnected (heartbeats keep live pipelines under the timeout)."""
-    import http.client
-    import time
-
-    from big_data_streaming_dashboard_spark.streaming.push import (
-        SSEBroadcaster,
-    )
-
-    hub = SSEBroadcaster(client_idle_timeout=0.3)
-    host, port = hub.start()
-    conn = http.client.HTTPConnection(host, port, timeout=10)
-    conn.request("GET", "/events")
-    conn.getresponse()
-    deadline = time.time() + 5
-    while hub.n_clients < 1 and time.time() < deadline:
-        time.sleep(0.02)
-    assert hub.n_clients == 1
-    deadline = time.time() + 5
-    while hub.n_clients and time.time() < deadline:
-        time.sleep(0.05)
-    assert hub.n_clients == 0  # evicted without any broadcast traffic
-    conn.close()
-    hub.stop()
 
 
 def _ws_connect(host, port):
@@ -427,6 +261,91 @@ def test_websocket_frame_lengths_and_bad_handshake():
     conn.request("GET", "/ws")  # no Upgrade headers
     assert conn.getresponse().status == 400
     conn.close()
+    hub.stop()
+
+
+def test_ws_batch_collect_capped(spark):
+    """An oversized (catch-up) micro-batch must not materialize fully
+    on the driver: the sink caps at max_rows_per_batch keeping the
+    NEWEST rows by (timestamp, event_id) -- the W8 retention shape."""
+    import json as _json
+
+    from big_data_streaming_dashboard_spark.streaming.ws import (
+        ws_foreach_batch,
+    )
+
+    class FakeHub:
+        def __init__(self):
+            self.payloads = []
+
+        def broadcast(self, payloads):
+            self.payloads.extend(payloads)
+
+    big = spark.range(5000).select(
+        F.col("id").alias("event_id"),
+        F.date_format(
+            F.timestamp_seconds(F.lit(1700000000) + F.col("id")),
+            "yyyy-MM-dd HH:mm:ss",
+        ).alias("timestamp"),
+        F.lit(1.0).alias("value"),
+    )
+    hub = FakeHub()
+    ws_foreach_batch(hub, max_rows_per_batch=100)(big, 0)
+    assert len(hub.payloads) == 100
+    ids = sorted(_json.loads(p)["event_id"] for p in hub.payloads)
+    assert ids == list(range(4900, 5000))  # newest 100 survive the cap
+
+
+def test_ws_client_queue_drop_oldest():
+    """A stalled client's queue is bounded: newer frames evict the
+    oldest (dropped_frames counts them) instead of growing without
+    bound or blocking the broadcast loop."""
+    import queue as _queue
+
+    from big_data_streaming_dashboard_spark.streaming.ws import (
+        WebSocketBroadcaster,
+    )
+
+    hub = WebSocketBroadcaster(max_queue_frames=4)
+    q = _queue.Queue(maxsize=4)
+    hub._clients[0] = q  # stalled client: nothing drains the queue
+    for i in range(10):
+        hub.broadcast([f'{{"i": {i}}}'])
+    assert q.qsize() == 4
+    assert hub.dropped_frames == 6
+    kept = [q.get_nowait() for _ in range(4)]
+    # unmasked FIN text frames with a 7-bit length (RFC 6455 5.2),
+    # built from the spec rather than from the server's frame builder
+    expect = []
+    for i in range(6, 10):
+        payload = f'{{"i": {i}}}'.encode()
+        expect.append(bytes([0x81, len(payload)]) + payload)
+    assert kept == expect  # the newest four survive, oldest first
+
+
+def test_ws_idle_client_evicted():
+    """A /ws client whose queue stays empty past client_idle_timeout is
+    disconnected (heartbeats keep live pipelines under the timeout)."""
+    import time
+
+    from big_data_streaming_dashboard_spark.streaming.ws import (
+        WebSocketBroadcaster,
+    )
+
+    hub = WebSocketBroadcaster(client_idle_timeout=0.3)
+    host, port = hub.start()
+    sock, read_message = _ws_connect(host, port)
+    deadline = time.time() + 5
+    while hub.n_clients < 1 and time.time() < deadline:
+        time.sleep(0.02)
+    assert hub.n_clients == 1
+    deadline = time.time() + 5
+    while hub.n_clients and time.time() < deadline:
+        time.sleep(0.05)
+    assert hub.n_clients == 0  # evicted without any broadcast traffic
+    with pytest.raises(ConnectionError):
+        read_message()  # the server closed the upgraded socket
+    sock.close()
     hub.stop()
 
 

@@ -340,67 +340,6 @@ def test_exact_cooldown_state_survives_micro_batches(spark, tmp_path):
     assert ids == [0, 3]
 
 
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs protobuf (not in container)",
-)
-def test_exact_cooldown_transform_with_state(spark, tmp_path):
-    """D2 on Spark 4's transformWithStateInPandas (StatefulProcessor +
-    ValueState, RocksDB provider): same cross-batch suppression as the
-    applyInPandasWithState form."""
-    from big_data_streaming_dashboard_spark.streaming.stateful import (
-        exact_cooldown_tws,
-    )
-
-    rows_by_file = [
-        [(0, "2024-01-01 10:00:00"), (1, "2024-01-01 10:00:20")],  # batch 1
-        [(2, "2024-01-01 10:00:25"), (3, "2024-01-01 10:00:40")],  # batch 2
-    ]
-    src = str(tmp_path / "alerts_src")
-    for rows in rows_by_file:
-        df = spark.createDataFrame(rows, "event_id long, ts string").select(
-            F.lit("warning-10.000,20.000").alias("cooldown_key"),
-            "event_id",
-            F.to_timestamp("ts").alias("event_time"),
-            F.lit(10.0).alias("lat"),
-            F.lit(20.0).alias("lon"),
-            F.lit(1200).cast("long").alias("value"),
-            F.lit("warning").alias("severity"),
-            F.lit("msg").alias("alert_message"),
-        )
-        df.coalesce(1).write.mode("append").parquet(src)
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(COOLDOWN_OUTPUT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        got = _run_stream(
-            spark, exact_cooldown_tws(stream), f"t_{uuid.uuid4().hex[:8]}"
-        )
-        ids = sorted(r["event_id"] for r in got.collect())
-        assert ids == [0, 3]
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_streaming_temporal_annotated_rejoin_matches_batch(
     spark, bronze_dir, tmp_path
 ):
