@@ -101,13 +101,11 @@ def compare_spark_duck(spark_df, duck_con, sql, limit_diff=8):
 # verify envelope (the r18 run was cut off at ~85% with zero failures;
 # 2,674 s measured this round with --durations=0). The default FAST
 # tier (pytest.ini addopts deselects `slow`) must finish well inside
-# ~15 minutes while keeping every operator family covered. Three
-# sources of `slow`:
+# ~20 minutes while keeping every operator family covered. Two
+# sources of `slow` (the full test_oracle sweep stays fast, see its
+# module docstring):
 #   1. tests/test_scale10x.py -- module-marked (10x fixtures).
-#   2. test_oracle's non-DRIVER_WINDOW parameterization (marked where
-#      it is parameterized; the fast tier keeps the exact 50-query
-#      window the driver re-checks).
-#   3. The explicit list below: the measured >=10 s streaming
+#   2. The explicit list below: the measured >=10 s streaming
 #      integration tests (appends/compaction/replay/serving-artifact
 #      builds dominate their walls) and the three brute-force recall
 #      A/Bs in test_ann, MINUS one kept-fast representative for every
@@ -171,7 +169,7 @@ _SLOW_BY_NODE = {
     "tests/test_streaming.py::test_streaming_bm25_matches_batch_for_arbitrary_queries",
     # test_ann brute-force recall A/Bs (37.6 / 30.2 / 28.6 s): the
     # emb family's output correctness stays fast-covered by the
-    # window oracle rows (emb_ivf_recall / emb_pq_recall / emb_kmeans)
+    # oracle rows (emb_ivf_recall / emb_pq_recall / emb_kmeans)
     # and the vec-attach gate test
     "tests/test_ann.py::test_neardup_banded_recall_vs_exact",
     "tests/test_ann.py::test_pq_topk_recall",
