@@ -246,7 +246,8 @@ def scale_hint(df: DataFrame, n_rows: int) -> DataFrame:
 # 4.31 GB) but a GLOBAL seed raise ballooned containment's
 # array-carrying exchange +116%, so the raise is applied ONLY to this
 # pair-keyed exchange, derived from the corpus count: one partition
-# per _PAIR_DOCS_PER_PARTITION docs, floored at the session default.
+# per _PAIR_DOCS_PER_PARTITION docs, floored at the session's batch
+# seed (`_batch_seed_partitions`).
 # Below the broadcast-safety gate (every sf<=0.1 fixture) the layout
 # is the session default, so small-SF plans are bit-identical to the
 # pre-r18 hash-matched ones. Calibration at 10x (50k docs -> 250
@@ -259,11 +260,28 @@ _PAIR_DOCS_PER_PARTITION = 200
 _PAIR_AGG_MAX_PARTITIONS = 32_768
 
 
-def _pair_agg_partitions(spark, n_rows: int) -> int:
+def _batch_seed_partitions(spark) -> int:
+    """The partition count a batch shuffle starts from, by Spark's own
+    ``SQLConf.numShufflePartitions`` rule: the AQE initial partition
+    number when AQE coalescing is on and it is set, else
+    ``spark.sql.shuffle.partitions`` (which `session.get_spark` sizes
+    for streaming state, not for batch plans)."""
+    conf = spark.conf
+    key = "spark.sql.shuffle.partitions"
+    if (
+        conf.get("spark.sql.adaptive.enabled", "true").lower() == "true"
+        and conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true").lower() == "true"
+        and conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum", None)
+    ):
+        key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     try:
-        floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        return int(conf.get(key))
     except (TypeError, ValueError):  # e.g. "auto" on managed platforms
-        floor = 200
+        return 200
+
+
+def _pair_agg_partitions(spark, n_rows: int) -> int:
+    floor = _batch_seed_partitions(spark)
     return max(
         floor,
         min(_PAIR_AGG_MAX_PARTITIONS, -(-n_rows // _PAIR_DOCS_PER_PARTITION)),

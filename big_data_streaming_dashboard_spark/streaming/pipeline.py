@@ -191,6 +191,15 @@ def full_stream(
     append branch -- both append-mode, so the combined query stays
     append. Invalid rows flow through with null temporal columns,
     exactly like the batch `operators/pipeline.batch_pipeline`.
+
+    Known waste: ``silver`` feeds both branches, so the plan holds two
+    ``dedupe`` state operators, each keeping every key it has seen
+    (the replay benchmark's state rows are 2 x ~174k). Filtering to
+    valid/invalid BEFORE the dedup would halve it but is not
+    equivalent: it changes which row survives when a valid and an
+    invalid reading share a composite key (value ``0.5`` vs
+    ``0.504``), and each branch would then scan the source itself,
+    doubling ``numInputRows``.
     """
     from ..operators.route import route
 

@@ -213,6 +213,142 @@ def test_full_stream_single_job_matches_batch_pipeline(spark, bronze_dir):
         assert b_rows[eid] == vals, eid
 
 
+def _stage_files(bronze_dir, dest, first, count):
+    """Copy files ``first .. first+count-1`` of the fixture, in the file
+    source's processing order (oldest mtime first), into ``dest`` with
+    strictly increasing mtimes that continue across calls."""
+    import shutil
+
+    files = sorted(
+        (os.path.join(bronze_dir, f) for f in os.listdir(bronze_dir) if f.endswith(".parquet")),
+        key=os.path.getmtime,
+    )
+    os.makedirs(dest, exist_ok=True)
+    base = os.path.getmtime(files[0])
+    for i in range(first, first + count):
+        to = os.path.join(dest, os.path.basename(files[i]))
+        shutil.copyfile(files[i], to)
+        os.utime(to, (base + i, base + i))
+    return len(files)
+
+
+class _EpochRouteCollector:
+    """Route writer that keeps one row count per (epoch_id, route): a
+    replayed epoch overwrites its first delivery, so it counts once.
+    ``kill_epoch`` makes the writer raise right after that epoch's
+    first route is written, as a crash in the middle of a sink write."""
+
+    def __init__(self, kill_epoch: int | None = None):
+        self.rows: dict[tuple[int, str], int] = {}
+        self.kill_epoch = kill_epoch
+
+    def __call__(self, name, df, epoch_id):
+        self.rows[(epoch_id, name)] = df.count()
+        if epoch_id == self.kill_epoch and name == ROUTES[0]:
+            raise RuntimeError(f"writer killed in epoch {epoch_id}")
+
+
+def _drain_full_stream(spark, src, checkpoint, writer):
+    """availableNow drain of ``src`` through full_stream into the routed
+    foreachBatch sink; returns the terminated query."""
+    from pyspark.errors import StreamingQueryException
+
+    from big_data_streaming_dashboard_spark.streaming.pipeline import full_stream
+
+    q = (
+        full_stream(stream_parquet_bronze(spark, src))
+        .writeStream.foreachBatch(route_foreach_batch(writer))
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(180)
+    except StreamingQueryException:
+        pass  # a killed writer; the caller inspects q.exception()
+    if q.isActive:
+        q.stop()
+    return q
+
+
+def test_session_contract_state_partitions_and_checkpoint_writer(spark, bronze_dir, tmp_path):
+    """`session.get_spark` gives streaming state one store per core
+    (`spark.sql.shuffle.partitions`), keeps batch plans on their seed
+    (AQE's `initialPartitionNum`, which Spark's numShufflePartitions
+    reads while coalescing is on) and writes checkpoints through the
+    shell-free file-system manager."""
+    from big_data_streaming_dashboard_spark.llmdata.dedup import _batch_seed_partitions
+    from big_data_streaming_dashboard_spark.session import get_spark
+
+    conf = spark.conf
+    initial = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    assert conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    cores = spark.sparkContext.defaultParallelism
+    assert conf.get("spark.sql.shuffle.partitions") == str(cores)
+    assert conf.get(initial) == "8"  # the test session's batch seed
+    assert spark._jsparkSession.sessionState().conf().numShufflePartitions() == 8
+
+    # get_spark on a running session re-applies its runtime SQL confs
+    # (master and memory stay), so a 3-core request shows both roles
+    # apart: 3 state partitions, batch seed max(3, 8)
+    try:
+        get_spark(app_name="tests", cpus=3)
+        assert conf.get("spark.sql.shuffle.partitions") == "3"
+        assert conf.get(initial) == "8"
+        assert _batch_seed_partitions(spark) == 8
+        src = str(tmp_path / "src")
+        _stage_files(bronze_dir, src, 0, 2)
+        q = _drain_full_stream(spark, src, str(tmp_path / "ck"), _EpochRouteCollector())
+        assert q.exception() is None
+        ops = [o for p in q.recentProgress for o in p["stateOperators"]]
+        assert ops
+        assert {o["numShufflePartitions"] for o in ops} == {3}
+    finally:
+        get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
+    assert conf.get("spark.sql.shuffle.partitions") == str(cores)
+
+
+def test_full_stream_restart_from_checkpoint_matches_uninterrupted(spark, bronze_dir, tmp_path):
+    """Crash and restart (Structured Streaming, SIGMOD 2018 section 6):
+    drain k of N files through full_stream into the routed sink, with
+    the writer killed halfway through epoch k-1's routes, then add the
+    other files and restart from the same checkpoint. Epoch k-1 is
+    replayed under the same epoch_id with the same rows, dedup and
+    window state come back from the checkpoint, and the route totals
+    equal one uninterrupted drain of all N files."""
+    k = 2
+    n = _stage_files(bronze_dir, str(tmp_path / "whole"), 0, 4)
+    assert n == 4
+    once = _EpochRouteCollector()
+    q = _drain_full_stream(spark, str(tmp_path / "whole"), str(tmp_path / "ck-whole"), once)
+    assert q.exception() is None
+
+    src, ck = str(tmp_path / "src"), str(tmp_path / "ck")
+    _stage_files(bronze_dir, src, 0, k)
+    killed = _EpochRouteCollector(kill_epoch=k - 1)
+    q = _drain_full_stream(spark, src, ck, killed)
+    assert q.exception() is not None
+    assert (k - 1, ROUTES[0]) in killed.rows
+    assert (k - 1, ROUTES[1]) not in killed.rows
+
+    _stage_files(bronze_dir, src, k, n - k)
+    resumed = _EpochRouteCollector()
+    q = _drain_full_stream(spark, src, ck, resumed)
+    assert q.exception() is None
+    assert min(e for e, _ in resumed.rows) == k - 1  # the killed epoch, replayed
+    replayed = (k - 1, ROUTES[0])
+    assert resumed.rows[replayed] == killed.rows[replayed]
+    # keyed by (epoch, route), the replayed delivery counts once; equal
+    # per-epoch counts mean equal route totals
+    delivered = {**killed.rows, **resumed.rows}
+    assert delivered == once.rows
+    for name in ("normal", "dirty"):
+        assert sum(c for (_, r), c in delivered.items() if r == name) > 0, name
+
+
 def test_stream_static_policy_enrichment(spark, bronze_dir):
     """Stream-static broadcast join: every valid row picks up its
     level's escalation policy; invalid rows pass with null policy."""
