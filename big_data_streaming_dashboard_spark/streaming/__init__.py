@@ -1,7 +1,7 @@
 from .metrics import IngestMetricsListener, with_observed_metrics
-from .pipeline import silver_stream, temporal_batch_stream
+from .pipeline import silver_stream
 from .serving import DashboardState, drop_heartbeats, priority_tag
-from .sinks import route_foreach_batch, run_to_memory
+from .sinks import route_foreach_batch
 from .stateful import exact_cooldown_batch, exact_cooldown_stream
 
 __all__ = [
@@ -12,8 +12,6 @@ __all__ = [
     "exact_cooldown_stream",
     "priority_tag",
     "route_foreach_batch",
-    "run_to_memory",
     "silver_stream",
-    "temporal_batch_stream",
     "with_observed_metrics",
 ]

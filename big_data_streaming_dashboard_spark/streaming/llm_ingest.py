@@ -54,6 +54,36 @@ rebuild-then-probe. Serving paths close the loop (r11):
 `rerank_topk_batches` (Hamming retrieval + cross-encoder over a
 persisted signed corpus) and `knn_classify_batches` (exact top-k
 majority vote), each exactly matching its batch twin.
+
+The serving-artifact protocol, stated once for every family:
+
+- Build: a ``write_*`` writer lays its pieces out under one root
+  (`_INDEX_LAYOUT` names the data pieces of the appendable kinds, scan
+  side first) and stamps ``path/fingerprint`` last with its ``kind``,
+  its build knobs and a fresh nonce (`_write_index_fingerprint`).
+- Append: the seven vector families (IVF, PQ, matryoshka, quant,
+  IVF-PQ, IVF-matryoshka, IVF-quant) fold a delta through ONE helper,
+  `_append_delta`: kind-checked stamp, frozen model, persisted derived
+  select, empty delta = no-op, ragged / torn / non-disjoint deltas
+  refused, pieces written, nonce re-stamped LAST (`restamp_index`).
+  Each family supplies only its kernel (load the frozen model, encode
+  the delta into named pieces). The banded, rerank, BM25, curation
+  and split roots keep their own append paths (a writer's
+  ``mode="append"`` or an ``append_*``) under the same re-stamp-last
+  rule. Appends are not snapshot-isolated; see `_append_delta` for
+  the crash windows and the quiesce rule.
+- Probe: every ``*_batches`` sink runs through ONE driver,
+  `_serve_batches`: foreachBatch under an availableNow trigger, the
+  nonce checks first in every micro-batch, empty micro-batches
+  skipped, the sink's per-batch plan appended to ``out_path`` as
+  parquet. The append is NOT idempotent, so a restartable run passes
+  ``checkpoint``. ``index_path`` names the root a sink pins
+  (`_pin_index`): a caller-held ``expected_fingerprint`` is verified
+  at call time, an unpinned sink snapshots the nonce at call time,
+  and each micro-batch re-checks it -- a rebuild, append or
+  compaction re-stamps the nonce, so a running stream fails over
+  loudly instead of mixing index versions across micro-batches. A
+  pin that names a root of the wrong kind refuses.
 """
 
 from __future__ import annotations
@@ -1017,21 +1047,10 @@ def write_ivf_index(
     cells = embeddings.select(
         "vec_id", "label", _dvec("embedding").alias("vec")
     ).join(assigned, "vec_id")
-    # static overwrite EXPLICITLY (r15 review): under a session-wide
-    # partitionOverwriteMode=dynamic, an in-place rebuild whose new
-    # Lloyd run leaves some cluster empty would keep that cluster's
-    # OLD cells directory -- stale vectors behind a fresh nonce
-    (
-        cells.write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("cluster")
-        .parquet(path + "/cells")
-    )
-    (
-        ivf_centroids(spark.read.parquet(path + "/cells"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path + "/centroids")
+    _write_pieces(path, "ivf", (cells,), "overwrite")
+    written = spark.read.parquet(path + "/cells")
+    ivf_centroids(written).coalesce(1).write.mode("overwrite").parquet(
+        path + "/centroids"
     )
     _write_index_fingerprint(
         spark,
@@ -1087,49 +1106,19 @@ def ivf_topk_batches(
     (<= n_lists ints) turned into a literal IN against the
     cluster-partitioned cells -- static partition pruning, the BM25
     term-bucket idiom -- and the per-query probe frame broadcasts.
-    Same ``checkpoint`` / ``index_path`` / ``expected_fingerprint``
-    nonce discipline as the family; ``exclude_self`` as in
-    `_dense_cosine_topk` (True for corpus-replay parity, False for
-    external request ids)."""
-    # kind-checked one-read snapshot (`_kind_snapshot`): the pin
-    # names a root -- verify it IS this kind of root and seed the
-    # unpinned nonce snapshot from the same read
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "IVF index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=_kind_snapshot(
-            queries.sparkSession, index_path, "ivf", "IVF",
-            "ivf_topk_batches",
-        ),
+    ``exclude_self`` as in `_dense_cosine_topk` (True for
+    corpus-replay parity, False for external request ids)."""
+    check, _ = _pin_kind(
+        queries.sparkSession, index_path, expected_fingerprint,
+        "ivf", "IVF", "ivf_topk_batches",
     )
     _centroid_count(index_centroids, "ivf_topk_batches")
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        # the ONE per-batch IVF plan, shared with the dense-retriever
-        # dispatch (r17)
-        ranked, cleanup = _ivf_ranked_plan(
+    return _serve_batches(
+        queries, out_path, checkpoint, [check],
+        lambda batch, _epoch: _ivf_ranked_plan(
             batch, index_cells, index_centroids, k, n_probe, exclude_self
-        )
-        try:
-            ranked.write.mode("append").parquet(out_path)
-        finally:
-            cleanup()
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
+        ),
     )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def write_pq_index(
@@ -1166,23 +1155,17 @@ def write_pq_index(
     encoded, codebooks = pq_encode(
         embeddings, n_subspaces, n_codes, iterations, dim
     )
-    encoded.select("vec_id", "label", "codes").write.mode(
-        "overwrite"
-    ).parquet(path + "/codes")
-    encoded.select("vec_id", "v").write.mode("overwrite").parquet(
-        path + "/vecs"
+    _write_pieces(
+        path, "pq",
+        (encoded.select("vec_id", "label", "codes"),
+         encoded.select("vec_id", "v")),
+        "overwrite",
     )
-    rows = [
-        (s, c, codebooks[s][c])
-        for s in range(len(codebooks))
-        for c in range(len(codebooks[s]))
-    ]
-    (
-        spark.createDataFrame(rows, "s int, code int, centroid array<double>")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path + "/codebooks")
-    )
+    rows = [(s, c, cb) for s, book in enumerate(codebooks)
+            for c, cb in enumerate(book)]
+    spark.createDataFrame(
+        rows, "s int, code int, centroid array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(path + "/codebooks")
     _write_index_fingerprint(
         spark,
         path,
@@ -1208,89 +1191,25 @@ def append_pq_index(embeddings: DataFrame, path: str) -> str:
     what an append deliberately does NOT do is retrain -- the model
     drifts from the corpus it summarizes as deltas accumulate, and the
     periodic retrain is a rebuild (the LSM-refresh story, same as IVF).
+    Protocol and guards: `_append_delta`; a codebooks/fingerprint
+    subspace-count disagreement additionally refuses (a mixed
+    artifact would encode deltas under a different rule than the
+    stored codes)."""
+    from ..llmdata.similarity import pq_code_col
 
-    Loud premise guards, mirroring the split/BM25 appends:
-      - an unstamped artifact and a non-PQ artifact refuse with
-        DISTINCT messages (the r14 ADVICE rule);
-      - a codebooks/fingerprint subspace-count disagreement refuses
-        (a mixed artifact would encode deltas under a different rule
-        than the stored codes);
-      - delta vectors whose width disagrees with the stored model
-        refuse (a short vector would zip_with-pad to null distances
-        and assign garbage codes silently);
-      - delta vec_ids already present in ``codes`` refuse (a
-        double-append would duplicate shortlist rows and corrupt the
-        per-query rank window);
-      - a TORN artifact (codes/vecs row counts disagree -- the crash
-        window between the two appends below) refuses before writing
-        anything, instead of burying the tear deeper.
-    Write order: codes, vecs, then the nonce re-stamp LAST (the stamp
-    is the completion marker). A crash BETWEEN the data writes leaves
-    the old nonce and the next append's/probe's torn-artifact guard
-    catches it; a crash AFTER both writes but BEFORE the stamp leaves
-    a CONSISTENT artifact under the old nonce -- retrying the delta
-    refuses as a double-append, and pinned probe streams keep passing
-    their stale nonce check, so recover with `restamp_index` once the
-    counts confirm the fold completed. The re-stamp fails over
-    running pinned probe streams per the family rule. An empty delta
-    is a no-op WITHOUT a re-stamp (no pointless stream failover).
+    def kernel(spark, fp, caller):
+        books = _load_codebooks(
+            spark.read.parquet(path + "/codebooks"), fp, caller
+        )
 
-    Concurrency delta (applies to the whole append family): appends
-    are not snapshot-isolated -- the data files land BEFORE the
-    re-stamp, so a pinned stream's micro-batch that runs concurrently
-    with an append can read a torn view (e.g. new codes whose vecs
-    rows are not yet visible silently miss the shortlist join) for
-    that one batch before the nonce check fails the stream over.
-    Quiesce probe streams across an append, or drive appends from a
-    cadence loop that serializes them with the probes (the
-    `split_verdicts_with_cadence` pattern)."""
-    from ..llmdata.similarity import _dvec, _normalize, pq_code_col
+        return len(books) * len(books[0][0]), lambda new: (
+            new.select("vec_id", "label", pq_code_col(books).alias("codes")),
+            new.select("vec_id", "v"),
+        )
 
-    spark = embeddings.sparkSession
-    fp = _read_stamped_fingerprint(
-        spark, path, "pq", "PQ", "append_pq_index"
+    return _append_delta(
+        embeddings, path, "pq", "PQ", "append_pq_index", kernel
     )
-    codebooks = _load_codebooks(spark.read.parquet(path + "/codebooks"))
-    if int(fp["n_subspaces"]) != len(codebooks):
-        raise ValueError(
-            f"append_pq_index: fingerprint stamps n_subspaces="
-            f"{fp['n_subspaces']} but the stored codebooks span "
-            f"{len(codebooks)} subspaces -- mixed artifact, rebuild"
-        )
-    dim = len(codebooks) * len(codebooks[0][0])
-
-    new = embeddings.select(
-        "vec_id", "label", _normalize(_dvec("embedding")).alias("v")
-    ).persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("v") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_pq_index: {bad_dim} delta vector(s) are not "
-                f"{dim}-dimensional -- the stored model encodes exactly "
-                f"{dim} dims; a ragged delta would assign garbage codes"
-            )
-        codes = spark.read.parquet(path + "/codes")
-        _require_untorn(
-            codes, spark.read.parquet(path + "/vecs"), "codes",
-            "append_pq_index",
-        )
-        _require_disjoint_delta(new, codes, "append_pq_index")
-        encoded = new.withColumn("codes", pq_code_col(codebooks))
-        encoded.select("vec_id", "label", "codes").write.mode(
-            "append"
-        ).parquet(path + "/codes")
-        encoded.select("vec_id", "v").write.mode("append").parquet(
-            path + "/vecs"
-        )
-    finally:
-        new.unpersist()
-    # re-stamp via the ONE nonce-refresh path -- preserves whatever
-    # keys the writer stamped, so a fingerprint-schema change cannot
-    # be silently dropped by a hand-enumerated dict here (r15 review)
-    return restamp_index(spark, path)
 
 
 def pq_topk_batches(
@@ -1323,51 +1242,24 @@ def pq_topk_batches(
     driver-side query collection) and each costs n_subspaces x
     n_codes x d_sub float ops for its table. ``shortlist`` defaults
     to the batch rule max(8k, corpus/8) via one count on the codes
-    artifact at construction. Same ``checkpoint`` / pin / ``exclude_self``
-    discipline as the family."""
-    # kind-checked one-read snapshot (`_kind_snapshot`): the pin
-    # names a root -- verify it IS this kind of root and seed the
-    # unpinned nonce snapshot from the same read
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "PQ index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=_kind_snapshot(
-            queries.sparkSession, index_path, "pq", "PQ",
-            "pq_topk_batches",
-        ),
+    artifact at construction."""
+    check, _ = _pin_kind(
+        queries.sparkSession, index_path, expected_fingerprint,
+        "pq", "PQ", "pq_topk_batches",
     )
-
     codebooks = _load_codebooks(index_codebooks)
     n_corpus = _require_untorn(
         index_codes, index_vecs, "codes", "pq_topk_batches"
     )
     if shortlist is None:
         shortlist = max(8 * k, n_corpus // 8)
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        # the ONE per-batch PQ plan, shared with the dense-retriever
-        # dispatch (r17 -- the _ivfpq_ranked_plan precedent)
-        ranked, _ = _pq_ranked_plan(
-            batch, index_codes, index_vecs, codebooks, k, shortlist,
-            exclude_self,
-        )
-        ranked.write.mode("append").parquet(out_path)
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
+    return _serve_batches(
+        queries, out_path, checkpoint, [check],
+        lambda batch, _epoch: _ivfpq_ranked_plan(
+            batch, index_codes, index_vecs, codebooks, None, k, None,
+            shortlist, exclude_self,
+        ),
     )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def write_matryoshka_index(
@@ -1420,17 +1312,12 @@ def write_matryoshka_index(
                 f"write_matryoshka_index: probe_dim={probe_dim} out of "
                 f"range [1, {dim}] for this corpus's vector width"
             )
-        (
-            unit.select(
-                "vec_id",
-                "label",
-                F.slice(F.col("v"), 1, probe_dim).alias("vp"),
-            )
-            .write.mode("overwrite")
-            .parquet(path + "/prefixes")
-        )
-        unit.select("vec_id", "v").write.mode("overwrite").parquet(
-            path + "/vecs"
+        _write_pieces(
+            path, "matryoshka",
+            (unit.select("vec_id", "label",
+                         F.slice("v", 1, probe_dim).alias("vp")),
+             unit.select("vec_id", "v")),
+            "overwrite",
         )
     finally:
         unit.unpersist()
@@ -1445,58 +1332,25 @@ def append_matryoshka_index(embeddings: DataFrame, path: str) -> str:
     The family's simplest append: there is no model to freeze --
     a vector's unit form and its prefix are per-row facts -- so
     append-then-probe equals rebuild-then-probe with NO premise (the
-    BM25 class, not the frozen-model class). Guards: unstamped /
-    non-matryoshka artifacts refuse distinctly; ragged delta dims
-    refuse; duplicate delta vec_ids refuse; a TORN prefixes/vecs
-    artifact refuses. Nonce re-stamps LAST; an empty delta is a
-    no-op. Appends are not snapshot-isolated -- see
-    `append_pq_index`'s concurrency delta."""
-    from ..llmdata.similarity import _dvec, _normalize
+    BM25 class, not the frozen-model class). Protocol and guards:
+    `_append_delta`; the width comes from the stored vecs."""
 
-    spark = embeddings.sparkSession
-    fp = _read_stamped_fingerprint(
-        spark, path, "matryoshka", "matryoshka", "append_matryoshka_index"
-    )
-    probe_dim = int(fp["probe_dim"])
-    dim = _stored_dim(
-        spark.read.parquet(path + "/vecs"), "v", "vecs",
-        "append_matryoshka_index",
-    )
+    def kernel(spark, fp, caller):
+        probe_dim = int(fp["probe_dim"])
+        dim = _stored_dim(
+            spark.read.parquet(path + "/vecs"), "v", "vecs", caller
+        )
 
-    new = embeddings.select(
-        "vec_id", "label", _normalize(_dvec("embedding")).alias("v")
-    ).persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("v") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_matryoshka_index: {bad_dim} delta vector(s) are "
-                f"not {dim}-dimensional -- the stored corpus is; a ragged "
-                "delta would rank against misaligned prefixes"
-            )
-        vecs = spark.read.parquet(path + "/vecs")
-        _require_untorn(
-            spark.read.parquet(path + "/prefixes"), vecs, "prefixes",
-            "append_matryoshka_index",
+        return dim, lambda new: (
+            new.select("vec_id", "label",
+                       F.slice("v", 1, probe_dim).alias("vp")),
+            new.select("vec_id", "v"),
         )
-        _require_disjoint_delta(new, vecs, "append_matryoshka_index")
-        (
-            new.select(
-                "vec_id",
-                "label",
-                F.slice(F.col("v"), 1, probe_dim).alias("vp"),
-            )
-            .write.mode("append")
-            .parquet(path + "/prefixes")
-        )
-        new.select("vec_id", "v").write.mode("append").parquet(
-            path + "/vecs"
-        )
-    finally:
-        new.unpersist()
-    return restamp_index(spark, path)
+
+    return _append_delta(
+        embeddings, path, "matryoshka", "matryoshka",
+        "append_matryoshka_index", kernel,
+    )
 
 
 def matryoshka_topk_batches(
@@ -1529,67 +1383,35 @@ def matryoshka_topk_batches(
     `emb_matryoshka_recall` measures, and the shortlist+rerank
     recovers most of what raw truncation loses (measured in
     PLANS.md). Default ``shortlist`` = the family's corpus/8 budget.
-    Same pin / checkpoint / ``exclude_self`` discipline as the
-    family."""
-    fp = None
-    if index_path is not None:
-        # one read: kind check, the nonce snapshot, and (below) the
-        # pinned-width authority (r17). The fingerprint read is always
-        # fresh, so it stays valid across a rebuild -- unlike the
-        # caller-supplied frames, whose file listing a rebuild
-        # invalidates; the PIN verification must therefore run before
-        # any frame I/O (a stale pin refuses with the family message,
-        # never FAILED_READ_FILE).
-        fp = _read_stamped_fingerprint(
-            queries.sparkSession, index_path, "matryoshka", "matryoshka",
-            "matryoshka_topk_batches",
-        )
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "matryoshka index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=fp.get("nonce") if fp is not None else None,
+    When ``index_path`` is pinned its STAMPED probe_dim is
+    authoritative (`_require_stamped_probe_dim`); the pin is verified
+    before any frame I/O, so a stale pin refuses with the family
+    message, never FAILED_READ_FILE."""
+    check, fp = _pin_kind(
+        queries.sparkSession, index_path, expected_fingerprint,
+        "matryoshka", "matryoshka", "matryoshka_topk_batches",
     )
-
-    probe_dim = frame_dim = _stored_dim(
+    probe_dim = _stored_dim(
         index_prefixes, "vp", "prefixes", "matryoshka_topk_batches"
     )
     if fp is not None:
         # frames are caller-supplied, so same_root=False keeps the
         # frame/path-mismatch message
         probe_dim = _require_stamped_probe_dim(
-            queries.sparkSession, index_path, "matryoshka", "matryoshka",
-            frame_dim, "matryoshka_topk_batches", fp=fp, same_root=False,
+            fp, index_path, probe_dim, "matryoshka_topk_batches", False
         )
     n_corpus = _require_untorn(
         index_prefixes, index_vecs, "prefixes", "matryoshka_topk_batches"
     )
     if shortlist is None:
         shortlist = max(8 * k, n_corpus // 8)
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        # the ONE per-batch matryoshka plan, shared with the
-        # dense-retriever dispatch (r17)
-        ranked, _ = _matryoshka_ranked_plan(
-            batch, index_prefixes, index_vecs, probe_dim, k, shortlist,
-            exclude_self,
-        )
-        ranked.write.mode("append").parquet(out_path)
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
+    return _serve_batches(
+        queries, out_path, checkpoint, [check],
+        lambda batch, _epoch: _ivfmat_ranked_plan(
+            batch, index_prefixes, index_vecs, None, probe_dim, k, None,
+            shortlist, exclude_self,
+        ),
     )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def write_quant_index(
@@ -1633,23 +1455,16 @@ def write_quant_index(
         )
     max_code = (1 << (bits - 1)) - 1
     # persisted: the codes and vecs writes both consume the source
-    # plan (the bpairs lesson). Persist a DERIVED select, never the
-    # caller's frame -- persist/unpersist act on the plan, so
-    # unpersisting `embeddings` itself would silently evict a cache
-    # the caller owns (the family rule; r15 review)
+    # plan (the bpairs lesson)
     src = embeddings.select("vec_id", "label", "embedding").persist()
     try:
         if src.isEmpty():
             raise ValueError("write_quant_index: empty embeddings input")
-        (
-            _quant_tinyint_codes(src, max_code)
-            .write.mode("overwrite")
-            .parquet(path + "/codes")
-        )
-        (
-            src.select("vec_id", _normalize(_dvec("embedding")).alias("v"))
-            .write.mode("overwrite")
-            .parquet(path + "/vecs")
+        _write_pieces(
+            path, "quant",
+            (_quant_tinyint_codes(src, max_code),
+             src.select("vec_id", _normalize(_dvec("embedding")).alias("v"))),
+            "overwrite",
         )
     finally:
         src.unpersist()
@@ -1664,54 +1479,22 @@ def append_quant_index(embeddings: DataFrame, path: str) -> str:
     Premise-free like the matryoshka append: the per-vector scale and
     codes are per-row facts (`_quant_code_vectors` touches nothing
     corpus-wide), so append-then-probe equals rebuild-then-probe with
-    NO premise. Guards: unstamped / non-quant artifacts refuse
-    distinctly; ragged delta dims refuse; duplicate delta vec_ids
-    refuse; a TORN codes/vecs artifact refuses. Nonce re-stamps LAST;
-    an empty delta is a no-op. Appends are not snapshot-isolated --
-    see `append_pq_index`'s concurrency delta."""
-    from ..llmdata.similarity import _dvec, _normalize
+    NO premise. Codes use the STAMPED bits; protocol and guards:
+    `_append_delta`."""
 
-    spark = embeddings.sparkSession
-    fp = _read_stamped_fingerprint(
-        spark, path, "quant", "quant", "append_quant_index"
-    )
-    max_code = (1 << (int(fp["bits"]) - 1)) - 1
-    dim = _stored_dim(
-        spark.read.parquet(path + "/vecs"), "v", "vecs",
-        "append_quant_index",
-    )
+    def kernel(spark, fp, caller):
+        max_code = (1 << (int(fp["bits"]) - 1)) - 1
+        dim = _stored_dim(
+            spark.read.parquet(path + "/vecs"), "v", "vecs", caller
+        )
+        return dim, lambda new: (
+            _quant_tinyint_codes(new.drop("v"), max_code),
+            new.select("vec_id", "v"),
+        )
 
-    # derived select, not the caller's frame (see write_quant_index)
-    new = embeddings.select("vec_id", "label", "embedding").persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("embedding") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_quant_index: {bad_dim} delta vector(s) are not "
-                f"{dim}-dimensional -- the stored corpus is; a ragged "
-                "delta would rank against misaligned codes"
-            )
-        codes = spark.read.parquet(path + "/codes")
-        _require_untorn(
-            codes, spark.read.parquet(path + "/vecs"), "codes",
-            "append_quant_index",
-        )
-        _require_disjoint_delta(new, codes, "append_quant_index")
-        (
-            _quant_tinyint_codes(new, max_code)
-            .write.mode("append")
-            .parquet(path + "/codes")
-        )
-        (
-            new.select("vec_id", _normalize(_dvec("embedding")).alias("v"))
-            .write.mode("append")
-            .parquet(path + "/vecs")
-        )
-    finally:
-        new.unpersist()
-    return restamp_index(spark, path)
+    return _append_delta(
+        embeddings, path, "quant", "quant", "append_quant_index", kernel
+    )
 
 
 def quant_topk_batches(
@@ -1739,49 +1522,23 @@ def quant_topk_batches(
     b=2 (the evaluator's near-lossless and provably-lossy rungs --
     same exactness either way, different recall, which
     `emb_quant_recall` measures). Default ``shortlist`` = the
-    family's corpus/8 budget; same pin / checkpoint / ``exclude_self``
-    discipline as the family."""
-    # kind-checked one-read snapshot (`_kind_snapshot`): the pin
-    # names a root -- verify it IS this kind of root and seed the
-    # unpinned nonce snapshot from the same read
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "quant index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=_kind_snapshot(
-            queries.sparkSession, index_path, "quant", "quant",
-            "quant_topk_batches",
-        ),
+    family's corpus/8 budget."""
+    check, _ = _pin_kind(
+        queries.sparkSession, index_path, expected_fingerprint,
+        "quant", "quant", "quant_topk_batches",
     )
-
     n_corpus = _require_untorn(
         index_codes, index_vecs, "codes", "quant_topk_batches"
     )
     if shortlist is None:
         shortlist = max(8 * k, n_corpus // 8)
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        # the ONE per-batch quant plan, shared with the dense-retriever
-        # dispatch (r17)
-        ranked, _ = _quant_ranked_plan(
-            batch, index_codes, index_vecs, k, shortlist, exclude_self
-        )
-        ranked.write.mode("append").parquet(out_path)
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
+    return _serve_batches(
+        queries, out_path, checkpoint, [check],
+        lambda batch, _epoch: _ivfquant_ranked_plan(
+            batch, index_codes, index_vecs, None, k, None, shortlist,
+            exclude_self,
+        ),
     )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def write_ivf_matryoshka_index(
@@ -1827,7 +1584,7 @@ def write_ivf_matryoshka_index(
     src = embeddings.select(
         "vec_id",
         "label",
-        _dvec("embedding").alias("vec"),
+        "embedding",
         _normalize(_dvec("embedding")).alias("v"),
     ).persist()
     try:
@@ -1837,9 +1594,7 @@ def write_ivf_matryoshka_index(
             )
         dim = len(src.select("v").first()["v"])
         if not 1 <= probe_dim <= dim:
-            # same knob guard as write_matryoshka_index: < 1 slices an
-            # empty prefix (NULL cosine, silently wrong shortlist);
-            # > dim negates the byte win; == dim is the brute collapse
+            # the write_matryoshka_index knob guard
             raise ValueError(
                 f"write_ivf_matryoshka_index: probe_dim={probe_dim} out "
                 f"of range [1, {dim}] for this corpus's vector width"
@@ -1849,26 +1604,20 @@ def write_ivf_matryoshka_index(
             "vec_id",
         ).persist()
         try:
-            (
+            _write_pieces(
+                path, "ivfmat",
+                (assigned.select("vec_id", "label",
+                                 F.slice("v", 1, probe_dim).alias("vp"),
+                                 "cluster"),
+                 assigned.select("vec_id", "v")),
+                "overwrite",
+            )
+            ivf_centroids(
                 assigned.select(
-                    "vec_id",
-                    "label",
-                    F.slice(F.col("v"), 1, probe_dim).alias("vp"),
-                    "cluster",
+                    "vec_id", _dvec("embedding").alias("vec"), "cluster"
                 )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .partitionBy("cluster")
-                .parquet(path + "/cells")
-            )
-            assigned.select("vec_id", "v").write.mode("overwrite").parquet(
-                path + "/vecs"
-            )
-            (
-                ivf_centroids(assigned.select("vec_id", "vec", "cluster"))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(path + "/centroids")
+            ).coalesce(1).write.mode("overwrite").parquet(
+                path + "/centroids"
             )
         finally:
             assigned.unpersist()
@@ -1890,80 +1639,31 @@ def write_ivf_matryoshka_index(
 def append_ivf_matryoshka_index(embeddings: DataFrame, path: str) -> str:
     """Fold an embedding delta into a `write_ivf_matryoshka_index`
     root: the cell is the nearest stored FINAL centroid
-    (`ivf_probe_rank` at n_probe=1 -- the `append_ivf_index` rule and
-    its documented boundary-assignment delta vs a rebuild), the
-    prefix is a per-row fact (the matryoshka premise) -- so the ONLY
-    frozen model is the centroids, and the means drift as deltas
-    accumulate exactly as for IVF (retrain = rebuild, the LSM-refresh
-    story). Guards are the family union: unstamped / wrong-kind
-    refuse distinctly, empty centroids refuse via `_stored_dim`,
-    ragged delta dims refuse, dup delta vec_ids refuse, a TORN
-    cells/vecs artifact refuses. Write order cells -> vecs -> nonce
-    re-stamp LAST; empty delta is a no-op. Appends are not
-    snapshot-isolated -- see `append_pq_index`'s concurrency delta."""
-    from ..llmdata.similarity import _dvec, _normalize, ivf_probe_rank
+    (`_frozen_cells` -- the `append_ivf_index` rule and its
+    documented boundary-assignment delta vs a rebuild), the prefix is
+    a per-row fact (the matryoshka premise) -- so the ONLY frozen
+    model is the centroids, and the means drift as deltas accumulate
+    exactly as for IVF (retrain = rebuild, the LSM-refresh story).
+    Protocol and guards: `_append_delta`; empty centroids refuse via
+    `_stored_dim`."""
 
-    spark = embeddings.sparkSession
-    fp = _read_stamped_fingerprint(
-        spark, path, "ivfmat", "IVF-matryoshka",
-        "append_ivf_matryoshka_index",
-    )
-    probe_dim = int(fp["probe_dim"])
-    cents = spark.read.parquet(path + "/centroids")
-    dim = _stored_dim(
-        cents, "centroid", "centroids", "append_ivf_matryoshka_index"
-    )
+    def kernel(spark, fp, caller):
+        probe_dim = int(fp["probe_dim"])
+        cents = spark.read.parquet(path + "/centroids")
+        dim = _stored_dim(cents, "centroid", "centroids", caller)
 
-    new = embeddings.select(
-        "vec_id",
-        "label",
-        _dvec("embedding").alias("vec"),
-        _normalize(_dvec("embedding")).alias("v"),
-    ).persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("vec") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_ivf_matryoshka_index: {bad_dim} delta vector(s) "
-                f"are not {dim}-dimensional -- the stored centroids are; "
-                "a ragged delta would assign a garbage cell"
-            )
-        cells = spark.read.parquet(path + "/cells")
-        _require_untorn(
-            cells, spark.read.parquet(path + "/vecs"), "cells",
-            "append_ivf_matryoshka_index",
-        )
-        _require_disjoint_delta(new, cells, "append_ivf_matryoshka_index")
-        assigned = ivf_probe_rank(
-            new.select(
-                F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
+        return dim, lambda new: (
+            _frozen_cells(new, cents).select(
+                "vec_id", "label",
+                F.slice("v", 1, probe_dim).alias("vp"), "cluster",
             ),
-            cents,
-            1,
-        ).select(
-            F.col("query_id").alias("vec_id"),
-            F.col("probe_cluster").alias("cluster"),
+            new.select("vec_id", "v"),
         )
-        (
-            new.join(assigned, "vec_id")
-            .select(
-                "vec_id",
-                "label",
-                F.slice(F.col("v"), 1, probe_dim).alias("vp"),
-                "cluster",
-            )
-            .write.mode("append")
-            .partitionBy("cluster")
-            .parquet(path + "/cells")
-        )
-        new.select("vec_id", "v").write.mode("append").parquet(
-            path + "/vecs"
-        )
-    finally:
-        new.unpersist()
-    return restamp_index(spark, path)
+
+    return _append_delta(
+        embeddings, path, "ivfmat", "IVF-matryoshka",
+        "append_ivf_matryoshka_index", kernel,
+    )
 
 
 def ivf_matryoshka_topk_batches(
@@ -2003,38 +1703,18 @@ def ivf_matryoshka_topk_batches(
     Default ``shortlist`` = the IVF-PQ rule
     max(8k, corpus * n_probe / (8 * n_lists)). The probe width comes
     from the STAMPED fingerprint when ``index_path`` is pinned
-    (refusing a frame/path mismatch -- the matryoshka r15 ADVICE
-    rule); same pin / checkpoint / ``exclude_self`` discipline as the
-    family."""
-    fp = None
-    if index_path is not None:
-        # one read: kind check, the nonce snapshot, and (below) the
-        # pinned-width authority (r17); pin verification stays ahead
-        # of any frame I/O -- see matryoshka_topk_batches
-        fp = _read_stamped_fingerprint(
-            queries.sparkSession, index_path, "ivfmat", "IVF-matryoshka",
-            "ivf_matryoshka_topk_batches",
-        )
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "IVF-matryoshka index at {path} was overwritten under a probe "
-        "stream (fingerprint {now} != snapshot {expected}); rebuild the "
-        "probe stream against the new index instead",
-        snapshot_nonce=fp.get("nonce") if fp is not None else None,
+    (refusing a frame/path mismatch -- see
+    `matryoshka_topk_batches`)."""
+    check, fp = _pin_kind(
+        queries.sparkSession, index_path, expected_fingerprint,
+        "ivfmat", "IVF-matryoshka", "ivf_matryoshka_topk_batches",
     )
-
-    probe_dim = frame_dim = _stored_dim(
+    probe_dim = _stored_dim(
         index_cells, "vp", "cells", "ivf_matryoshka_topk_batches"
     )
     if fp is not None:
-        # frames are caller-supplied, so same_root=False keeps the
-        # frame/path-mismatch message
         probe_dim = _require_stamped_probe_dim(
-            queries.sparkSession, index_path, "ivfmat", "IVF-matryoshka",
-            frame_dim, "ivf_matryoshka_topk_batches", fp=fp,
-            same_root=False,
+            fp, index_path, probe_dim, "ivf_matryoshka_topk_batches", False
         )
     n_lists = _centroid_count(index_centroids, "ivf_matryoshka_topk_batches")
     n_corpus = _require_untorn(
@@ -2042,55 +1722,33 @@ def ivf_matryoshka_topk_batches(
     )
     if shortlist is None:
         shortlist = max(8 * k, n_corpus * n_probe // (8 * n_lists))
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        ranked, done = _ivfmat_ranked_plan(
-            batch,
-            index_cells,
-            index_vecs,
-            index_centroids,
-            probe_dim,
-            k,
-            n_probe,
-            shortlist,
-            exclude_self,
-        )
-        try:
-            ranked.write.mode("append").parquet(out_path)
-        finally:
-            done()
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
+    return _serve_batches(
+        queries, out_path, checkpoint, [check],
+        lambda batch, _epoch: _ivfmat_ranked_plan(
+            batch, index_cells, index_vecs, index_centroids, probe_dim,
+            k, n_probe, shortlist, exclude_self,
+        ),
     )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def _ivfmat_ranked_plan(
     batch: DataFrame,
     index_cells: DataFrame,
     index_vecs: DataFrame,
-    index_centroids: DataFrame,
+    index_centroids: DataFrame | None,
     probe_dim: int,
     k: int,
-    n_probe: int,
+    n_probe: int | None,
     shortlist: int,
     exclude_self: bool,
 ):
-    """The per-batch IVF x matryoshka ranking, I/O-free: (ranked_df,
+    """The per-batch (IVF x) matryoshka ranking, I/O-free: (ranked_df,
     cleanup) for arriving (vec_id, embedding) rows against in-memory
     artifact frames -- the prefix-cosine coarse score through the
     shared `_ivf_cascade_ranked_plan` scaffold, so the dense-retriever
-    dispatch (`_ann_dense_retriever`) and the probe sink consume ONE
-    plan. ``cleanup`` unpersists the probe frame and must be called
-    after the ranked frame is consumed."""
+    dispatch (`_ann_dense_retriever`) and the probe sinks consume ONE
+    plan. ``index_centroids=None`` is the flat matryoshka kind (full
+    prefix scan)."""
     from ..llmdata.similarity import _dvec, _normalize, cosine
 
     qdf = batch.select(
@@ -2165,34 +1823,20 @@ def write_ivf_quant_index(
             # cluster rides THROUGH the code projection (passthrough
             # columns in _quant_code_vectors) -- no corpus-sized
             # re-join to restore the partition key (r16 review)
-            (
-                _quant_tinyint_codes(
-                    assigned.select(
-                        "vec_id", "label", "embedding", "cluster"
-                    ),
-                    max_code,
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .partitionBy("cluster")
-                .parquet(path + "/cells")
+            _write_pieces(
+                path, "ivfquant",
+                (_quant_tinyint_codes(assigned, max_code),
+                 assigned.select(
+                     "vec_id", _normalize(_dvec("embedding")).alias("v")
+                 )),
+                "overwrite",
             )
-            (
+            ivf_centroids(
                 assigned.select(
-                    "vec_id", _normalize(_dvec("embedding")).alias("v")
+                    "vec_id", _dvec("embedding").alias("vec"), "cluster"
                 )
-                .write.mode("overwrite")
-                .parquet(path + "/vecs")
-            )
-            (
-                ivf_centroids(
-                    assigned.select(
-                        "vec_id", _dvec("embedding").alias("vec"), "cluster"
-                    )
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(path + "/centroids")
+            ).coalesce(1).write.mode("overwrite").parquet(
+                path + "/centroids"
             )
         finally:
             assigned.unpersist()
@@ -2213,70 +1857,28 @@ def write_ivf_quant_index(
 
 def append_ivf_quant_index(embeddings: DataFrame, path: str) -> str:
     """Fold an embedding delta into a `write_ivf_quant_index` root:
-    the cell is the nearest stored FINAL centroid (`ivf_probe_rank`
-    at n_probe=1 -- the `append_ivf_index` rule), the codes are
-    per-row facts under the STAMPED bits (`_quant_code_vectors` --
-    the quant premise), so the only frozen model is the centroids
-    (retrain = rebuild, the LSM-refresh story). Guards are the family
-    union: unstamped / wrong-kind refuse distinctly, empty centroids
-    refuse via `_stored_dim`, ragged delta dims refuse, dup delta
-    vec_ids refuse, a TORN cells/vecs artifact refuses. Write order
-    cells -> vecs -> nonce re-stamp LAST; empty delta is a no-op."""
-    from ..llmdata.similarity import _dvec, _normalize, ivf_probe_rank
+    the cell is the nearest stored FINAL centroid (`_frozen_cells` --
+    the `append_ivf_index` rule), the codes are per-row facts under
+    the STAMPED bits (`_quant_code_vectors` -- the quant premise), so
+    the only frozen model is the centroids (retrain = rebuild, the
+    LSM-refresh story). Protocol and guards: `_append_delta`; empty
+    centroids refuse via `_stored_dim`."""
 
-    spark = embeddings.sparkSession
-    fp = _read_stamped_fingerprint(
-        spark, path, "ivfquant", "IVF-quant", "append_ivf_quant_index"
-    )
-    max_code = (1 << (int(fp["bits"]) - 1)) - 1
-    cents = spark.read.parquet(path + "/centroids")
-    dim = _stored_dim(
-        cents, "centroid", "centroids", "append_ivf_quant_index"
-    )
-
-    new = embeddings.select("vec_id", "label", "embedding").persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("embedding") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_ivf_quant_index: {bad_dim} delta vector(s) are "
-                f"not {dim}-dimensional -- the stored centroids are; a "
-                "ragged delta would assign a garbage cell"
-            )
-        cells = spark.read.parquet(path + "/cells")
-        _require_untorn(
-            cells, spark.read.parquet(path + "/vecs"), "cells",
-            "append_ivf_quant_index",
-        )
-        _require_disjoint_delta(new, cells, "append_ivf_quant_index")
-        assigned = ivf_probe_rank(
-            new.select(
-                F.col("vec_id").alias("query_id"),
-                _dvec("embedding").alias("qvec"),
+    def kernel(spark, fp, caller):
+        max_code = (1 << (int(fp["bits"]) - 1)) - 1
+        cents = spark.read.parquet(path + "/centroids")
+        dim = _stored_dim(cents, "centroid", "centroids", caller)
+        return dim, lambda new: (
+            _quant_tinyint_codes(
+                _frozen_cells(new.drop("v"), cents), max_code
             ),
-            cents,
-            1,
-        ).select(
-            F.col("query_id").alias("vec_id"),
-            F.col("probe_cluster").alias("cluster"),
+            new.select("vec_id", "v"),
         )
-        (
-            _quant_tinyint_codes(new, max_code)
-            .join(assigned, "vec_id")
-            .write.mode("append")
-            .partitionBy("cluster")
-            .parquet(path + "/cells")
-        )
-        (
-            new.select("vec_id", _normalize(_dvec("embedding")).alias("v"))
-            .write.mode("append")
-            .parquet(path + "/vecs")
-        )
-    finally:
-        new.unpersist()
-    return restamp_index(spark, path)
+
+    return _append_delta(
+        embeddings, path, "ivfquant", "IVF-quant",
+        "append_ivf_quant_index", kernel,
+    )
 
 
 def ivf_quant_topk_batches(
@@ -2305,22 +1907,10 @@ def ivf_quant_topk_batches(
     collapse argument). Scale: bounded literal-IN static partition
     pruning + a byte-class scan -- the two budgets multiply. Default
     ``shortlist`` = the IVF family rule
-    max(8k, corpus * n_probe / (8 * n_lists)); same pin / checkpoint
-    / ``exclude_self`` discipline as the family."""
-    # kind-checked one-read snapshot (`_kind_snapshot`): the pin
-    # names a root -- verify it IS this kind of root and seed the
-    # unpinned nonce snapshot from the same read
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "IVF-quant index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=_kind_snapshot(
-            queries.sparkSession, index_path, "ivfquant", "IVF-quant",
-            "ivf_quant_topk_batches",
-        ),
+    max(8k, corpus * n_probe / (8 * n_lists))."""
+    check, _ = _pin_kind(
+        queries.sparkSession, index_path, expected_fingerprint,
+        "ivfquant", "IVF-quant", "ivf_quant_topk_batches",
     )
     n_lists = _centroid_count(index_centroids, "ivf_quant_topk_batches")
     n_corpus = _require_untorn(
@@ -2328,51 +1918,30 @@ def ivf_quant_topk_batches(
     )
     if shortlist is None:
         shortlist = max(8 * k, n_corpus * n_probe // (8 * n_lists))
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        ranked, done = _ivfquant_ranked_plan(
-            batch,
-            index_cells,
-            index_vecs,
-            index_centroids,
-            k,
-            n_probe,
-            shortlist,
-            exclude_self,
-        )
-        try:
-            ranked.write.mode("append").parquet(out_path)
-        finally:
-            done()
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
+    return _serve_batches(
+        queries, out_path, checkpoint, [check],
+        lambda batch, _epoch: _ivfquant_ranked_plan(
+            batch, index_cells, index_vecs, index_centroids, k, n_probe,
+            shortlist, exclude_self,
+        ),
     )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def _ivfquant_ranked_plan(
     batch: DataFrame,
     index_cells: DataFrame,
     index_vecs: DataFrame,
-    index_centroids: DataFrame,
+    index_centroids: DataFrame | None,
     k: int,
-    n_probe: int,
+    n_probe: int | None,
     shortlist: int,
     exclude_self: bool,
 ):
-    """The per-batch IVF x quant ranking, I/O-free: (ranked_df,
+    """The per-batch (IVF x) quant ranking, I/O-free: (ranked_df,
     cleanup) -- the code-cosine coarse score through the shared
-    `_ivf_cascade_ranked_plan` scaffold, shared by the probe sink and
-    the dense-retriever dispatch. ``cleanup`` unpersists the probe
-    frame and must be called after the ranked frame is consumed."""
+    `_ivf_cascade_ranked_plan` scaffold, shared by the probe sinks and
+    the dense-retriever dispatch. ``index_centroids=None`` is the
+    flat quant kind (full code scan)."""
     from ..llmdata.similarity import _dvec, _normalize, cosine
 
     qdf = batch.select(
@@ -2446,10 +2015,13 @@ def _compact_parquet_dir(
     fs.delete(hpath(backup), True)
 
 
-# kind -> ((subdir, partition column), ...) for `compact_serving_index`;
-# every listed dir holds per-row facts (rewrite-only compaction), and
-# bm25's stats log is special-cased to its SUM merge in the function.
-_INDEX_COMPACT_LAYOUT: dict = {
+# kind -> ((subdir, partition column), ...): the data pieces of each
+# appendable serving root, scan side first. The builds and the vector
+# appends write them in this order (`_write_pieces`), the probes read
+# the scan side by it, and `compact_serving_index` rewrites them --
+# every listed dir holds per-row facts (rewrite-only compaction);
+# bm25's stats log is special-cased to its SUM merge there.
+_INDEX_LAYOUT: dict = {
     "pq": (("codes", None), ("vecs", None)),
     "ivfpq": (("cells", "cluster"), ("vecs", None)),
     "ivf": (("cells", "cluster"),),
@@ -2469,6 +2041,25 @@ _INDEX_COMPACT_LAYOUT: dict = {
 }
 
 
+def _write_pieces(path: str, kind: str, pieces, mode: str) -> None:
+    """Write a vector root's data pieces in `_INDEX_LAYOUT` order (the
+    scan side first, then vecs) -- shared by the builds (overwrite)
+    and `_append_delta` (append). Partitioned dirs overwrite
+    STATICALLY: under a session-wide
+    partitionOverwriteMode=dynamic, an in-place rebuild whose new
+    Lloyd run leaves some cluster empty would keep that cluster's OLD
+    cells directory -- stale vectors behind a fresh nonce."""
+    for (subdir, partition_by), piece in zip(
+        _INDEX_LAYOUT[kind], pieces, strict=True
+    ):
+        w = piece.write.mode(mode)
+        if partition_by is not None:
+            w = w.option("partitionOverwriteMode", "static").partitionBy(
+                partition_by
+            )
+        w.parquet(f"{path}/{subdir}")
+
+
 def compact_serving_index(spark: SparkSession, path: str) -> str:
     """LSM compaction for the append-able serving indexes: N appends
     leave N generations of small files per directory (and, for BM25,
@@ -2480,7 +2071,7 @@ def compact_serving_index(spark: SparkSession, path: str) -> str:
     over the un-compacted artifact, so this can run at any cadence.
     Compact-then-probe equals probe (pinned row-for-row).
 
-    Each directory swap follows the `compact_curation_index`
+    Each directory swap follows the `_compact_parquet_dir`
     tmp/backup/rename discipline; the nonce re-stamps LAST -- a
     compaction changes the on-disk fileset, and a probe stream's
     static plan holds the OLD file listing, so pinned running streams
@@ -2499,13 +2090,13 @@ def compact_serving_index(spark: SparkSession, path: str) -> str:
             "root (sub-indexes with their own fingerprints + a MIN "
             "log); use compact_curation_index"
         )
-    if kind not in _INDEX_COMPACT_LAYOUT:
+    if kind not in _INDEX_LAYOUT:
         raise ValueError(
             f"compact_serving_index: artifact kind {kind!r} at {path} "
             "has no registered compaction layout (supported: "
-            f"{sorted(_INDEX_COMPACT_LAYOUT)})"
+            f"{sorted(_INDEX_LAYOUT)})"
         )
-    for subdir, partition_by in _INDEX_COMPACT_LAYOUT[kind]:
+    for subdir, partition_by in _INDEX_LAYOUT[kind]:
         _compact_parquet_dir(spark, f"{path}/{subdir}", partition_by)
     if kind == "bm25":
         stats_df = spark.read.parquet(path + "/stats")
@@ -2532,8 +2123,6 @@ def compact_serving_index(spark: SparkSession, path: str) -> str:
                 [tuple(row)], schema
             ).coalesce(1),
         )
-    # nonce refresh rides restamp_index -- the ONE re-stamp path, so a
-    # fingerprint-schema change lands in one place (r15 ADVICE item 3);
     # the fingerprint was already validated at function entry
     return restamp_index(spark, path)
 
@@ -2606,36 +2195,18 @@ def _require_stamped_knobs(
 
 
 def _require_stamped_probe_dim(
-    spark: SparkSession,
-    index_path: str,
-    kind: str,
-    display: str,
-    frame_dim: int,
-    caller: str,
-    fp: dict | None = None,
-    same_root: bool | None = None,
+    fp: dict, index_path: str, frame_dim: int, caller: str, same_root: bool
 ) -> int:
     """The prefix family's pinned-width rule in ONE place (r15 ADVICE
-    item 2; hand-rolled three times by mid-r16 -- the `_load_codebooks`
-    consolidation class): the STAMPED probe_dim is authoritative when
-    a root is named. Frames read from a DIFFERENT artifact than the
-    pin (or a mixed artifact whose stamp disagrees with its stored
-    prefixes) would silently probe at the wrong width -- the nonce pin
-    alone cannot catch a frame/path mismatch. Pass the already-read
-    ``fp`` when the frames were read from the pinned root ITSELF (the
-    dense-retriever case): it skips a second fingerprint read and
-    reports a width disagreement accurately as a MIXED artifact
-    instead of a frame/path mismatch (r16 second review). A caller
-    whose frames are CALLER-SUPPLIED (not necessarily from the pinned
-    root) but who already read the fingerprint for its kind check
-    passes ``same_root=False`` alongside ``fp`` -- one read without
-    flipping the message semantics (r17)."""
-    if same_root is None:
-        same_root = fp is not None
-    if fp is None:
-        fp = _read_stamped_fingerprint(
-            spark, index_path, kind, display, caller
-        )
+    item 2): the STAMPED probe_dim (``fp``, the root's already-read
+    fingerprint) is authoritative when a root is named. Frames read
+    from a DIFFERENT artifact than the pin (or a mixed artifact whose
+    stamp disagrees with its stored prefixes) would silently probe at
+    the wrong width -- the nonce pin alone cannot catch a frame/path
+    mismatch. ``same_root`` says whether the frames were read from the
+    pinned root ITSELF (the dense-retriever case: a disagreement is a
+    MIXED artifact) or were caller-supplied (the sinks: a
+    disagreement is a frame/path mismatch)."""
     probe_dim = int(fp["probe_dim"])
     if probe_dim != frame_dim:
         if same_root:
@@ -2867,11 +2438,15 @@ def _centroid_count(index_centroids: DataFrame, caller: str) -> int:
     return n
 
 
-def _load_codebooks(codebooks_df: DataFrame) -> list[list[list[float]]]:
+def _load_codebooks(
+    codebooks_df: DataFrame, fp: dict | None = None, caller: str = ""
+) -> list[list[list[float]]]:
     """The stored PQ model as the nested n_subspaces x n_codes x d_sub
     list the shared `pq_lut`/`pq_code_col` arithmetic consumes --
-    defined once for the PQ/IVF-PQ probes and appends (the loader was
-    copy-pasted three times before the r15 review)."""
+    defined once for the PQ/IVF-PQ probes and appends. Pass the root's
+    fingerprint ``fp`` to refuse a codebooks/stamp subspace-count
+    disagreement (a mixed artifact would encode deltas, or rank
+    queries, under a different rule than the stored codes)."""
     cb_rows = codebooks_df.orderBy("s", "code").collect()
     if not cb_rows:
         # same failure class as _stored_dim: an empty codebooks dir
@@ -2881,6 +2456,12 @@ def _load_codebooks(codebooks_df: DataFrame) -> list[list[list[float]]]:
             "rebuild the index"
         )
     n_subspaces = 1 + max(r["s"] for r in cb_rows)
+    if fp is not None and int(fp["n_subspaces"]) != n_subspaces:
+        raise ValueError(
+            f"{caller}: fingerprint stamps n_subspaces="
+            f"{fp['n_subspaces']} but the stored codebooks span "
+            f"{n_subspaces} subspaces -- mixed artifact, rebuild"
+        )
     books: list[list[list[float]]] = [[] for _ in range(n_subspaces)]
     for r in cb_rows:
         books[r["s"]].append(list(r["centroid"]))
@@ -2890,21 +2471,123 @@ def _load_codebooks(codebooks_df: DataFrame) -> list[list[list[float]]]:
 def restamp_index(spark: SparkSession, path: str) -> str:
     """Refresh a stamped index root's nonce, preserving EVERY knob
     stamp (whatever keys the writer stamped -- no hand-enumerated
-    dict to drift; the appends end with this call, so a future
-    fingerprint-schema change lands in one place). Also the RECOVERY
-    for the append family's stamp-crash window: an append whose data
-    writes all landed but whose final re-stamp did not leaves a
-    CONSISTENT artifact (the torn guards pass) under the OLD nonce,
-    so retrying the delta refuses as a double-append while pinned
-    probe streams keep passing their nonce check against a file
-    listing that predates the append -- they would never see the
-    appended rows. Run this after confirming the fold completed (the
+    dict to drift; appends and compactions end with this call, so a
+    future fingerprint-schema change lands in one place). Also the
+    RECOVERY for the append protocol's stamp-crash window (see
+    `_append_delta`): run it after confirming the fold completed (the
     guards' counts agree); it fails pinned streams over exactly as a
     completed append would."""
     fp = _read_stamped_fingerprint(spark, path, None, "", "restamp_index")
     fp.pop("nonce", None)
     _write_index_fingerprint(spark, path, fp)
     return path
+
+
+def _append_delta(
+    embeddings: DataFrame,
+    path: str,
+    kind: str,
+    display: str,
+    caller: str,
+    kernel,
+) -> str:
+    """The ONE vector-append protocol, shared by the seven vector
+    families (IVF, PQ, matryoshka, quant, IVF-PQ, IVF-matryoshka,
+    IVF-quant). A family supplies only ``kernel(spark, fp, caller) ->
+    (dim, encode)``: it loads the frozen model from the root (refusing
+    an empty or mixed one) and returns the stored vector width plus
+    ``encode(new)``, which turns the persisted (vec_id, label,
+    embedding, v) delta -- ``v`` the unit vector -- into the family's
+    pieces in `_INDEX_LAYOUT` order. Steps, in order:
+
+      1. read the kind-checked stamp -- an unstamped root and a
+         wrong-kind artifact refuse with DISTINCT messages;
+      2. persist a DERIVED select, never the caller's frame
+         (persist/unpersist act on the plan, so unpersisting
+         ``embeddings`` itself would evict a cache the caller owns);
+      3. an empty delta is a no-op WITHOUT a re-stamp (no pointless
+         stream failover);
+      4. guards: delta vectors whose width disagrees with the stored
+         model refuse (a short vector would zip_with-pad to null
+         distances and encode garbage silently); a TORN two-directory
+         artifact refuses before anything is written
+         (`_require_untorn`); delta vec_ids already on the scan side
+         refuse (`_require_disjoint_delta` -- a double-append would
+         duplicate shortlist rows);
+      5. write the pieces, scan side first;
+      6. re-stamp the nonce LAST (`restamp_index`): the stamp is the
+         completion marker, and it fails pinned probe streams over.
+
+    Crash windows: a crash BETWEEN the data writes leaves the old
+    nonce, and the next append's or probe's torn guard catches it; a
+    crash AFTER the writes but BEFORE the stamp leaves a CONSISTENT
+    artifact under the old nonce -- retrying the delta refuses as a
+    double-append while pinned probes keep passing their stale nonce
+    check, so recover with `restamp_index` once the counts confirm the
+    fold. Appends are not snapshot-isolated: the data files land
+    before the re-stamp, so a pinned stream's micro-batch running
+    concurrently can read a torn view (new codes whose vecs rows are
+    not yet visible silently miss the shortlist join) for that one
+    batch before the nonce check fails it over. Quiesce probe streams
+    across an append, or serialize appends with the probes from a
+    cadence loop (the `split_verdicts_with_cadence` pattern)."""
+    from ..llmdata.similarity import _dvec, _normalize
+
+    spark = embeddings.sparkSession
+    fp = _read_stamped_fingerprint(spark, path, kind, display, caller)
+    dim, encode = kernel(spark, fp, caller)
+    layout = _INDEX_LAYOUT[kind]
+    scan_name = layout[0][0]
+    # v: the unit vector every shortlist kind stores as its vecs piece
+    # and cuts prefixes / PQ codes from -- computed once per delta row
+    new = embeddings.select(
+        "vec_id",
+        "label",
+        "embedding",
+        _normalize(_dvec("embedding")).alias("v"),
+    ).persist()
+    try:
+        if new.isEmpty():
+            return path
+        bad_dim = new.filter(F.size("embedding") != dim).count()
+        if bad_dim:
+            raise ValueError(
+                f"{caller}: {bad_dim} delta vector(s) are not "
+                f"{dim}-dimensional -- the stored index is; a ragged "
+                "delta would be encoded against misaligned dimensions"
+            )
+        scan = spark.read.parquet(f"{path}/{scan_name}")
+        if len(layout) > 1:
+            _require_untorn(
+                scan, spark.read.parquet(path + "/vecs"), scan_name, caller
+            )
+        _require_disjoint_delta(new, scan, caller)
+        _write_pieces(path, kind, encode(new), "append")
+    finally:
+        new.unpersist()
+    return restamp_index(spark, path)
+
+
+def _frozen_cells(frame: DataFrame, cents: DataFrame) -> DataFrame:
+    """``frame`` (vec_id, embedding, ...) joined with each vector's
+    cell under the FROZEN stored centroids: `similarity.ivf_probe_rank`
+    at n_probe=1 in raw space -- the exact rule queries probe by, so
+    an appended vector sits in the first cell any query that should
+    find it looks in. Shared by the four IVF-layout appends."""
+    from ..llmdata.similarity import _dvec, ivf_probe_rank
+
+    assigned = ivf_probe_rank(
+        frame.select(
+            F.col("vec_id").alias("query_id"),
+            _dvec("embedding").alias("qvec"),
+        ),
+        cents,
+        1,
+    ).select(
+        F.col("query_id").alias("vec_id"),
+        F.col("probe_cluster").alias("cluster"),
+    )
+    return frame.join(assigned, "vec_id")
 
 
 def _read_stamped_fingerprint(
@@ -2940,72 +2623,33 @@ def _read_stamped_fingerprint(
 def append_ivf_index(embeddings: DataFrame, path: str) -> str:
     """Fold an embedding delta into an existing `write_ivf_index` root
     under the FROZEN stored centroids: each new vector lands in its
-    nearest FINAL-assignment cell -- `similarity.ivf_probe_rank` at
-    n_probe=1, the exact rule by which queries will probe for it, so
-    an appended vector is by construction in the first cell any query
-    that should find it looks in. Given the centroids, the cell of a
-    vector is a per-row fact; what an append deliberately does NOT do
-    is move the means -- the model drifts from the corpus as deltas
-    accumulate (appended mass never re-centers its cell), and the
-    periodic re-train is a rebuild (the LSM-refresh story, same as
-    PQ/IVF-PQ). Note the documented assignment delta: a REBUILD
-    assigns under `kmeans_assign`'s last Lloyd iteration (pre-update
-    centroids), so a boundary vector can sit in a different cell than
-    this append would choose -- both are valid IVF assignments at the
-    same budget, the same margin argument as the n_probe=1 probe
-    delta.
+    nearest FINAL-assignment cell (`_frozen_cells`). Given the
+    centroids, the cell of a vector is a per-row fact; what an append
+    deliberately does NOT do is move the means -- the model drifts
+    from the corpus as deltas accumulate (appended mass never
+    re-centers its cell), and the periodic re-train is a rebuild (the
+    LSM-refresh story, same as PQ/IVF-PQ). Note the documented
+    assignment delta: a REBUILD assigns under `kmeans_assign`'s last
+    Lloyd iteration (pre-update centroids), so a boundary vector can
+    sit in a different cell than this append would choose -- both are
+    valid IVF assignments at the same budget, the same margin
+    argument as the n_probe=1 probe delta. Protocol and guards:
+    `_append_delta` (one data directory, so no torn guard)."""
+    from ..llmdata.similarity import _dvec
 
-    Guards (the append-family rules): unstamped / non-IVF artifacts
-    refuse distinctly; ragged delta dims refuse (zip_with would pad
-    null distances and assign a garbage cell); delta vec_ids already
-    in ``cells`` refuse (a double-append would duplicate rank rows).
-    The nonce re-stamps LAST, failing over running pinned probe
-    streams; an empty delta is a no-op without a re-stamp. Appends
-    are not snapshot-isolated -- see `append_pq_index`'s concurrency
-    delta."""
-    from ..llmdata.similarity import _dvec, ivf_probe_rank
-
-    spark = embeddings.sparkSession
-    _read_stamped_fingerprint(spark, path, "ivf", "IVF", "append_ivf_index")
-    cents = spark.read.parquet(path + "/centroids")
-    dim = _stored_dim(cents, "centroid", "centroids", "append_ivf_index")
-
-    new = embeddings.select(
-        "vec_id", "label", _dvec("embedding").alias("vec")
-    ).persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("vec") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_ivf_index: {bad_dim} delta vector(s) are not "
-                f"{dim}-dimensional -- the stored centroids are; a ragged "
-                "delta would assign a garbage cell"
-            )
-        _require_disjoint_delta(
-            new, spark.read.parquet(path + "/cells"), "append_ivf_index"
-        )
-        assigned = ivf_probe_rank(
-            new.select(
-                F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
+    def kernel(spark, fp, caller):
+        cents = spark.read.parquet(path + "/centroids")
+        dim = _stored_dim(cents, "centroid", "centroids", caller)
+        return dim, lambda new: (
+            _frozen_cells(new, cents).select(
+                "vec_id", "label", _dvec("embedding").alias("vec"),
+                "cluster",
             ),
-            cents,
-            1,
-        ).select(
-            F.col("query_id").alias("vec_id"),
-            F.col("probe_cluster").alias("cluster"),
         )
-        (
-            new.join(assigned, "vec_id")
-            .select("vec_id", "label", "vec", "cluster")
-            .write.mode("append")
-            .partitionBy("cluster")
-            .parquet(path + "/cells")
-        )
-    finally:
-        new.unpersist()
-    return restamp_index(spark, path)
+
+    return _append_delta(
+        embeddings, path, "ivf", "IVF", "append_ivf_index", kernel
+    )
 
 
 def write_ivfpq_index(
@@ -3068,41 +2712,24 @@ def write_ivfpq_index(
     )
     encoded = encoded.persist()
     try:
-        # static overwrite, the write_ivf_index lesson: under dynamic
-        # partitionOverwriteMode an in-place rebuild that empties a
-        # cluster would keep that cluster's OLD cells directory
-        (
-            encoded.select("vec_id", "label", "codes")
-            .join(assigned, "vec_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("cluster")
-            .parquet(path + "/cells")
+        _write_pieces(
+            path, "ivfpq",
+            (encoded.select("vec_id", "label", "codes").join(
+                assigned, "vec_id"
+            ),
+             encoded.select("vec_id", "v")),
+            "overwrite",
         )
-        encoded.select("vec_id", "v").write.mode("overwrite").parquet(
-            path + "/vecs"
-        )
-        rows = [
-            (s, c, codebooks[s][c])
-            for s in range(len(codebooks))
-            for c in range(len(codebooks[s]))
-        ]
-        (
-            spark.createDataFrame(
-                rows, "s int, code int, centroid array<double>"
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path + "/codebooks")
-        )
+        rows = [(s, c, cb) for s, book in enumerate(codebooks)
+                for c, cb in enumerate(book)]
+        spark.createDataFrame(
+            rows, "s int, code int, centroid array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(path + "/codebooks")
         raw = embeddings.select(
             "vec_id", _dvec("embedding").alias("vec")
         ).join(assigned, "vec_id")
-        (
-            ivf_centroids(raw)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path + "/centroids")
+        ivf_centroids(raw).coalesce(1).write.mode("overwrite").parquet(
+            path + "/centroids"
         )
     finally:
         encoded.unpersist()
@@ -3125,90 +2752,33 @@ def write_ivfpq_index(
 def append_ivfpq_index(embeddings: DataFrame, path: str) -> str:
     """Fold an embedding delta into an existing `write_ivfpq_index`
     root under BOTH frozen models: the cell is the nearest stored
-    FINAL centroid (`ivf_probe_rank` at n_probe=1, raw space -- the
+    FINAL centroid (`_frozen_cells`, raw space -- the
     `append_ivf_index` rule) and the codes come from the frozen
     codebooks (`pq_code_col`, unit space -- the `append_pq_index`
     rule). Given the models, both are per-row facts, so
     append-then-probe equals a same-models encode of the delta
     row-for-row (pinned against a pure-Python recompute); reTRAINING
-    either model is a rebuild (the LSM-refresh story).
+    either model is a rebuild (the LSM-refresh story). Protocol and
+    guards: `_append_delta`, plus the codebooks/stamp subspace check
+    of `append_pq_index`."""
+    from ..llmdata.similarity import pq_code_col
 
-    Guards are the union of the two constituents': unstamped /
-    non-IVF-PQ artifacts refuse distinctly; a codebooks/fingerprint
-    subspace disagreement refuses; ragged delta dims refuse; delta
-    vec_ids already in ``cells`` refuse; a TORN cells/vecs artifact
-    (the crash window between the two data writes) refuses before
-    writing. Write order: cells, vecs, nonce re-stamp LAST (the
-    completion marker); an empty delta is a no-op without a
-    re-stamp. Appends are not snapshot-isolated -- see
-    `append_pq_index`'s concurrency delta."""
-    from ..llmdata.similarity import (
-        _dvec,
-        _normalize,
-        ivf_probe_rank,
-        pq_code_col,
-    )
-
-    spark = embeddings.sparkSession
-    fp = _read_stamped_fingerprint(
-        spark, path, "ivfpq", "IVF-PQ", "append_ivfpq_index"
-    )
-    codebooks = _load_codebooks(spark.read.parquet(path + "/codebooks"))
-    if int(fp["n_subspaces"]) != len(codebooks):
-        raise ValueError(
-            f"append_ivfpq_index: fingerprint stamps n_subspaces="
-            f"{fp['n_subspaces']} but the stored codebooks span "
-            f"{len(codebooks)} subspaces -- mixed artifact, rebuild"
+    def kernel(spark, fp, caller):
+        books = _load_codebooks(
+            spark.read.parquet(path + "/codebooks"), fp, caller
         )
-    dim = len(codebooks) * len(codebooks[0][0])
-    cents = spark.read.parquet(path + "/centroids")
-
-    new = embeddings.select(
-        "vec_id",
-        "label",
-        _dvec("embedding").alias("vec"),
-        _normalize(_dvec("embedding")).alias("v"),
-    ).persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("vec") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_ivfpq_index: {bad_dim} delta vector(s) are not "
-                f"{dim}-dimensional -- the stored models encode exactly "
-                f"{dim} dims; a ragged delta would assign garbage"
-            )
-        cells = spark.read.parquet(path + "/cells")
-        _require_untorn(
-            cells, spark.read.parquet(path + "/vecs"), "cells",
-            "append_ivfpq_index",
-        )
-        _require_disjoint_delta(new, cells, "append_ivfpq_index")
-        assigned = ivf_probe_rank(
-            new.select(
-                F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
+        cents = spark.read.parquet(path + "/centroids")
+        return len(books) * len(books[0][0]), lambda new: (
+            _frozen_cells(new, cents).select(
+                "vec_id", "label", pq_code_col(books).alias("codes"),
+                "cluster",
             ),
-            cents,
-            1,
-        ).select(
-            F.col("query_id").alias("vec_id"),
-            F.col("probe_cluster").alias("cluster"),
+            new.select("vec_id", "v"),
         )
-        encoded = new.withColumn("codes", pq_code_col(codebooks))
-        (
-            encoded.join(assigned, "vec_id")
-            .select("vec_id", "label", "codes", "cluster")
-            .write.mode("append")
-            .partitionBy("cluster")
-            .parquet(path + "/cells")
-        )
-        encoded.select("vec_id", "v").write.mode("append").parquet(
-            path + "/vecs"
-        )
-    finally:
-        new.unpersist()
-    return restamp_index(spark, path)
+
+    return _append_delta(
+        embeddings, path, "ivfpq", "IVF-PQ", "append_ivfpq_index", kernel
+    )
 
 
 def ivfpq_topk_batches(
@@ -3249,24 +2819,11 @@ def ivfpq_topk_batches(
     ``shortlist`` keeps the family's 1/8-of-candidates budget:
     max(8k, corpus * n_probe / (8 * n_lists)) -- which reduces to the
     PQ rule corpus/8 at n_probe == n_lists (the equivalence pin's
-    premise). Same pin / checkpoint / ``exclude_self`` discipline as
-    the family."""
-    # kind-checked one-read snapshot (`_kind_snapshot`): the pin
-    # names a root -- verify it IS this kind of root and seed the
-    # unpinned nonce snapshot from the same read
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "IVF-PQ index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=_kind_snapshot(
-            queries.sparkSession, index_path, "ivfpq", "IVF-PQ",
-            "ivfpq_topk_batches",
-        ),
+    premise)."""
+    check, _ = _pin_kind(
+        queries.sparkSession, index_path, expected_fingerprint,
+        "ivfpq", "IVF-PQ", "ivfpq_topk_batches",
     )
-
     codebooks = _load_codebooks(index_codebooks)
     n_lists = _centroid_count(index_centroids, "ivfpq_topk_batches")
     n_corpus = _require_untorn(
@@ -3274,35 +2831,13 @@ def ivfpq_topk_batches(
     )
     if shortlist is None:
         shortlist = max(8 * k, n_corpus * n_probe // (8 * n_lists))
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        ranked, done = _ivfpq_ranked_plan(
-            batch,
-            index_cells,
-            index_vecs,
-            codebooks,
-            index_centroids,
-            k,
-            n_probe,
-            shortlist,
-            exclude_self,
-        )
-        try:
-            ranked.write.mode("append").parquet(out_path)
-        finally:
-            done()
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
+    return _serve_batches(
+        queries, out_path, checkpoint, [check],
+        lambda batch, _epoch: _ivfpq_ranked_plan(
+            batch, index_cells, index_vecs, codebooks, index_centroids,
+            k, n_probe, shortlist, exclude_self,
+        ),
     )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def _ivfpq_ranked_plan(
@@ -3310,20 +2845,20 @@ def _ivfpq_ranked_plan(
     index_cells: DataFrame,
     index_vecs: DataFrame,
     codebooks: list[list[list[float]]],
-    index_centroids: DataFrame,
+    index_centroids: DataFrame | None,
     k: int,
-    n_probe: int,
+    n_probe: int | None,
     shortlist: int,
     exclude_self: bool,
 ):
-    """The per-batch IVF-PQ ranking, I/O-free: (ranked_df, cleanup) for
-    arriving (vec_id, embedding) rows against in-memory artifact
-    frames. Extracted from the sink loop so the randomized-corpora
+    """The per-batch (IVF-)PQ ranking, I/O-free: (ranked_df, cleanup)
+    for arriving (vec_id, embedding) rows against in-memory artifact
+    frames; ``index_centroids=None`` is the flat PQ kind (full codes
+    scan). Extracted from the sink loop so the randomized-corpora
     parity test (`test_streaming_ivfpq_randomized_corpora_parity`, the
     BM25 `_bm25_postings` precedent) can exercise the probe/ADC/tie
     arithmetic on corpora far outside the fixture distribution without
-    a streaming round-trip per seed. ``cleanup`` unpersists the probe
-    frame and must be called after the ranked frame is consumed."""
+    a streaming round-trip per seed."""
     from ..llmdata.similarity import (
         _dvec,
         _normalize,
@@ -3358,190 +2893,70 @@ def _ivf_cascade_ranked_plan(
     batch: DataFrame,
     index_cells: DataFrame,
     index_vecs: DataFrame,
-    index_centroids: DataFrame,
+    index_centroids: DataFrame | None,
     k: int,
-    n_probe: int,
+    n_probe: int | None,
     shortlist: int,
     exclude_self: bool,
     qdf: DataFrame,
     adc,
 ):
-    """The ONE IVF-cascade scaffold (r16 review: the probe/broadcast/
-    exclude-self/shortlist skeleton existed in three parallel copies
-    across `_ivfpq_ranked_plan`/`_ivfmat_ranked_plan`/
-    `_ivfquant_ranked_plan` -- a probe-plan fix must land ONCE, the
-    `ivf_centroids` shared-rule discipline): rank centroids, collect
-    the bounded probe set, literal-IN-prune the cluster-partitioned
-    cells, broadcast-join the probes and the batch-sized ``qdf``
-    (which must carry at least (query_id, _qv)), score the coarse
-    ``adc`` Column, and run the verbatim `pq_shortlist_rerank` tail.
-    Returns (ranked_df, cleanup); ``cleanup`` unpersists the probe
-    frame and must be called after the ranked frame is consumed."""
+    """The ONE shortlist-cascade scaffold of the six shortlist kinds
+    (a probe-plan fix must land ONCE, the `ivf_centroids` shared-rule
+    discipline). IVF layouts rank the centroids, collect the bounded
+    probe set, literal-IN-prune the cluster-partitioned cells and
+    broadcast-join the probes; the flat kinds (``index_centroids``
+    None) cross-join the whole scan side instead. Either way the
+    batch-sized ``qdf`` (which must carry at least (query_id, _qv))
+    broadcasts, the coarse ``adc`` Column scores the candidates, and
+    the verbatim `pq_shortlist_rerank` tail ranks them. Returns
+    (ranked_df, cleanup); ``cleanup`` (None for the flat kinds)
+    unpersists the probe frame and must be called after the ranked
+    frame is consumed."""
     from ..llmdata.similarity import (
         _dvec,
         ivf_probe_rank,
         pq_shortlist_rerank,
     )
 
-    qs = batch.select(
-        F.col("vec_id").alias("query_id"),
-        _dvec("embedding").alias("qvec"),
-    )
-    # persisted: the probed-cluster collect and the scored join both
-    # consume the probe plan (the bpairs lesson)
-    probes = ivf_probe_rank(qs, index_centroids, n_probe).persist()
+    probes = None
     try:
-        probed = sorted(
-            r["probe_cluster"]
-            for r in probes.select("probe_cluster").distinct().collect()
-        )
-        scored = (
-            index_cells.filter(F.col("cluster").isin(probed))
-            .join(
-                F.broadcast(probes.select("query_id", "probe_cluster")),
-                F.col("cluster") == F.col("probe_cluster"),
+        if index_centroids is None:
+            scored = index_cells.crossJoin(F.broadcast(qdf))
+        else:
+            qs = batch.select(
+                F.col("vec_id").alias("query_id"),
+                _dvec("embedding").alias("qvec"),
             )
-            .join(F.broadcast(qdf), "query_id")
-        )
+            # persisted: the probed-cluster collect and the scored
+            # join both consume the probe plan (the bpairs lesson)
+            probes = ivf_probe_rank(qs, index_centroids, n_probe).persist()
+            probed = sorted(
+                r["probe_cluster"]
+                for r in probes.select("probe_cluster").distinct().collect()
+            )
+            scored = (
+                index_cells.filter(F.col("cluster").isin(probed))
+                .join(
+                    F.broadcast(probes.select("query_id", "probe_cluster")),
+                    F.col("cluster") == F.col("probe_cluster"),
+                )
+                .join(F.broadcast(qdf), "query_id")
+            )
         if exclude_self:
             scored = scored.filter(F.col("vec_id") != F.col("query_id"))
         scored = scored.select(
-            "query_id",
-            "vec_id",
-            "label",
-            adc.alias("_adc"),
-            "_qv",
+            "query_id", "vec_id", "label", adc.alias("_adc"), "_qv"
         )
         ranked = pq_shortlist_rerank(scored, k, shortlist, vecs=index_vecs)
     except BaseException:
         # a failure in the probed-cluster collect must not leak the
         # pinned probe frame (r17 review -- same class as
         # _ivf_ranked_plan)
-        probes.unpersist()
+        if probes is not None:
+            probes.unpersist()
         raise
-    return ranked, probes.unpersist
-
-
-def _pq_ranked_plan(
-    batch: DataFrame,
-    index_codes: DataFrame,
-    index_vecs: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int,
-    shortlist: int,
-    exclude_self: bool,
-):
-    """The per-batch PQ ranking, I/O-free: extracted from
-    `pq_topk_batches`' sink loop (r17 -- the `_ivfpq_ranked_plan`
-    precedent) so the dense-retriever dispatch and the probe sink
-    consume ONE plan. Returns (ranked_df, cleanup) with cleanup=None
-    (nothing persisted -- the flat kinds' coarse stage is a single
-    broadcast cross-join)."""
-    from ..llmdata.similarity import (
-        _dvec,
-        _normalize,
-        pq_adc_dist,
-        pq_lut,
-        pq_shortlist_rerank,
-    )
-
-    n_subspaces = len(codebooks)
-    qrows = batch.select(
-        F.col("vec_id").alias("query_id"),
-        _normalize(_dvec("embedding")).alias("qvec"),
-    ).collect()
-    qdf = batch.sparkSession.createDataFrame(
-        [
-            (r["query_id"], list(r["qvec"]), pq_lut(list(r["qvec"]), codebooks))
-            for r in qrows
-        ],
-        "query_id long, _qv array<double>, lut array<array<double>>",
-    )
-    scored = index_codes.crossJoin(F.broadcast(qdf))
-    if exclude_self:
-        scored = scored.filter(F.col("vec_id") != F.col("query_id"))
-    scored = scored.select(
-        "query_id",
-        "vec_id",
-        "label",
-        pq_adc_dist(F.col("lut"), F.col("codes"), n_subspaces).alias("_adc"),
-        "_qv",
-    )
-    return pq_shortlist_rerank(scored, k, shortlist, vecs=index_vecs), None
-
-
-def _matryoshka_ranked_plan(
-    batch: DataFrame,
-    index_prefixes: DataFrame,
-    index_vecs: DataFrame,
-    probe_dim: int,
-    k: int,
-    shortlist: int,
-    exclude_self: bool,
-):
-    """The per-batch matryoshka ranking, I/O-free (extracted from
-    `matryoshka_topk_batches`, same contract as `_pq_ranked_plan`)."""
-    from ..llmdata.similarity import (
-        _dvec,
-        _normalize,
-        cosine,
-        pq_shortlist_rerank,
-    )
-
-    qdf = batch.select(
-        F.col("vec_id").alias("query_id"),
-        _normalize(_dvec("embedding")).alias("_qv"),
-    ).withColumn("_qp", F.slice(F.col("_qv"), 1, probe_dim))
-    scored = index_prefixes.crossJoin(F.broadcast(qdf))
-    if exclude_self:
-        scored = scored.filter(F.col("vec_id") != F.col("query_id"))
-    scored = scored.select(
-        "query_id",
-        "vec_id",
-        "label",
-        (-cosine(F.col("_qp"), F.col("vp"))).alias("_adc"),
-        "_qv",
-    )
-    return pq_shortlist_rerank(scored, k, shortlist, vecs=index_vecs), None
-
-
-def _quant_ranked_plan(
-    batch: DataFrame,
-    index_codes: DataFrame,
-    index_vecs: DataFrame,
-    k: int,
-    shortlist: int,
-    exclude_self: bool,
-):
-    """The per-batch quant ranking, I/O-free (extracted from
-    `quant_topk_batches`, same contract as `_pq_ranked_plan`)."""
-    from ..llmdata.similarity import (
-        _dvec,
-        _normalize,
-        cosine,
-        pq_shortlist_rerank,
-    )
-
-    qdf = batch.select(
-        F.col("vec_id").alias("query_id"),
-        _normalize(_dvec("embedding")).alias("_qv"),
-    )
-    scored = index_codes.crossJoin(F.broadcast(qdf))
-    if exclude_self:
-        scored = scored.filter(F.col("vec_id") != F.col("query_id"))
-    scored = scored.select(
-        "query_id",
-        "vec_id",
-        "label",
-        (
-            -cosine(
-                F.col("_qv"),
-                F.transform("q", lambda x: x.cast("double")),
-            )
-        ).alias("_adc"),
-        "_qv",
-    )
-    return pq_shortlist_rerank(scored, k, shortlist, vecs=index_vecs), None
+    return ranked, None if probes is None else probes.unpersist
 
 
 def _ivf_ranked_plan(
@@ -3602,37 +3017,35 @@ def _ann_dense_retriever(
     keyword endpoint and the knn classifier brute-scanned the float
     vecs via `_dense_cosine_topk` while ANN serving sat in the same
     file). Dispatches on the STAMPED kind over ALL SEVEN servable
-    layouts (r16 verdict item 3 widened it from the three composed
-    kinds -- a user holding a plain `write_pq_index` root was forced
-    into a composed rebuild): the composed ``ivfpq`` / ``ivfmat`` /
-    ``ivfquant`` cascades, the flat shortlist kinds ``pq`` /
+    layouts: the composed ``ivfpq`` / ``ivfmat``
+    / ``ivfquant`` cascades, the flat shortlist kinds ``pq`` /
     ``matryoshka`` / ``quant``, and plain ``ivf``. Returns
-    ``retrieve(batch, k) -> (ranked, cleanup)`` where ``ranked``
-    carries the family's (query_id, vec_id, label, rank) surface
-    through the SAME per-batch plan the kind's own probe sink serves,
-    so at full budget (n_probe = n_lists and/or shortlist = corpus)
-    the ranking collapses to exact brute-force (parity-pinned; one
-    stated delta: the shortlist re-rank orders on the ROUND-6 cosine
-    where the brute scan orders unrounded, so two candidates within
-    1e-6 of each other can swap -- a display-tie the parity fixtures
-    don't contain, not an approximation) and at serving budgets the
-    endpoint inherits the kind's measured probe-budget win.
+    ``(retrieve, fp)``: ``retrieve(batch, k) -> (ranked, cleanup)``
+    where ``ranked`` carries the family's (query_id, vec_id, label,
+    rank) surface through the SAME per-batch plan the kind's own probe
+    sink serves, so at full budget (n_probe = n_lists and/or shortlist
+    = corpus) the ranking collapses to exact brute-force
+    (parity-pinned; one stated delta: the shortlist re-rank orders on
+    the ROUND-6 cosine where the brute scan orders unrounded, so two
+    candidates within 1e-6 of each other can swap -- a display-tie the
+    parity fixtures don't contain, not an approximation) and at
+    serving budgets the endpoint inherits the kind's measured
+    probe-budget win. The already-read fingerprint ``fp`` rides back
+    so the caller's nonce pin snapshots without a second read.
 
     Budget knobs by kind: ``n_probe`` drives the four IVF-layout
     kinds and is ignored by the flat kinds (their coarse stage is a
     full-corpus code/prefix scan -- the byte win, not a partition
-    win); ``shortlist`` drives the six shortlist-re-rank kinds and is
-    REFUSED on plain ``ivf`` (its probed cells carry full floats, so
-    scoring is exact within the probe budget -- no re-rank stage; a
-    supplied shortlist would protect nothing, so it raises per the
-    family's no-op-knob idiom).
-    Returns ``(retrieve, fp)`` -- the already-read fingerprint rides
-    back so the caller's nonce pin can snapshot without a second read
-    (`_pin_index(snapshot_nonce=...)`, r17 second review).
+    win); ``shortlist`` drives the six shortlist-re-rank kinds
+    (default: the sinks' max(8k, corpus * n_probe / (8 * n_lists)),
+    corpus/8 for the flat kinds) and is REFUSED on plain ``ivf`` (its
+    probed cells carry full floats, so scoring is exact within the
+    probe budget -- no re-rank stage; a supplied shortlist would
+    protect nothing, so it raises per the family's no-op-knob idiom).
 
     Artifact guards at CONSTRUCTION time (before any stream starts):
     unstamped / non-servable kinds refuse distinctly; the PQ-family
-    codebooks/fingerprint subspan disagreement refuses; torn
+    codebooks/fingerprint subspace disagreement refuses; torn
     scan/vecs dirs refuse (`_require_untorn`); empty centroids refuse
     (`_centroid_count`); the prefix kinds' stamped probe_dim is
     authoritative (`_require_stamped_probe_dim`). Version pinning
@@ -3640,59 +3053,13 @@ def _ann_dense_retriever(
     should target this same root."""
     fp = _read_stamped_fingerprint(spark, path, None, "", caller)
     kind = fp.get("kind")
-    if kind in ("ivfpq", "ivfmat", "ivfquant"):
-        cells = spark.read.parquet(path + "/cells")
-        vecs = spark.read.parquet(path + "/vecs")
-        n_corpus = _require_untorn(cells, vecs, "cells", caller)
-        cents = spark.read.parquet(path + "/centroids")
-        n_lists = _centroid_count(cents, caller)
-
-        def _sl(k: int) -> int:
-            # the IVF family's shared budget rule (reduces to corpus/8
-            # at n_probe == n_lists -- the full-budget collapse premise)
-            if shortlist is not None:
-                return shortlist
-            return max(8 * k, n_corpus * n_probe // (8 * n_lists))
-
-        if kind == "ivfpq":
-            codebooks = _load_codebooks(
-                spark.read.parquet(path + "/codebooks")
-            )
-            if int(fp["n_subspaces"]) != len(codebooks):
-                raise ValueError(
-                    f"{caller}: fingerprint stamps n_subspaces="
-                    f"{fp['n_subspaces']} but the stored codebooks span "
-                    f"{len(codebooks)} subspaces -- mixed artifact, rebuild"
-                )
-
-            def retrieve(batch: DataFrame, k: int):
-                return _ivfpq_ranked_plan(
-                    batch, cells, vecs, codebooks, cents, k, n_probe,
-                    _sl(k), exclude_self,
-                )
-
-        elif kind == "ivfmat":
-            probe_dim = _require_stamped_probe_dim(
-                spark, path, "ivfmat", "IVF-matryoshka",
-                _stored_dim(cells, "vp", "cells", caller), caller, fp=fp,
-            )
-
-            def retrieve(batch: DataFrame, k: int):
-                return _ivfmat_ranked_plan(
-                    batch, cells, vecs, cents, probe_dim, k, n_probe,
-                    _sl(k), exclude_self,
-                )
-
-        else:  # ivfquant -- codes are self-describing, no width check
-
-            def retrieve(batch: DataFrame, k: int):
-                return _ivfquant_ranked_plan(
-                    batch, cells, vecs, cents, k, n_probe, _sl(k),
-                    exclude_self,
-                )
-
-        return retrieve, fp
-
+    if kind not in ("ivfpq", "ivfmat", "ivfquant", "ivf", "pq",
+                    "matryoshka", "quant"):
+        raise ValueError(
+            f"{caller}: artifact at {path} is stamped kind={kind!r}, "
+            "not a servable dense index (expected ivfpq, ivfmat, "
+            "ivfquant, ivf, pq, matryoshka, or quant)"
+        )
     if kind == "ivf":
         if shortlist is not None:
             # plain ivf has no re-rank stage (probed cells carry full
@@ -3712,66 +3079,51 @@ def _ann_dense_retriever(
         cents = spark.read.parquet(path + "/centroids")
         _centroid_count(cents, caller)
 
-        def retrieve(batch: DataFrame, k: int):
+        def retrieve_ivf(batch: DataFrame, k: int):
             return _ivf_ranked_plan(
                 batch, cells, cents, k, n_probe, exclude_self
             )
 
-        return retrieve, fp
+        return retrieve_ivf, fp
 
-    if kind in ("pq", "matryoshka", "quant"):
-        scan_name = "prefixes" if kind == "matryoshka" else "codes"
-        scan = spark.read.parquet(f"{path}/{scan_name}")
-        vecs = spark.read.parquet(path + "/vecs")
-        n_corpus = _require_untorn(scan, vecs, scan_name, caller)
+    scan_name = _INDEX_LAYOUT[kind][0][0]
+    scan = spark.read.parquet(f"{path}/{scan_name}")
+    vecs = spark.read.parquet(path + "/vecs")
+    n_corpus = _require_untorn(scan, vecs, scan_name, caller)
+    cents, probe_n, n_lists = None, None, 1  # flat kinds scan it all
+    if kind.startswith("ivf"):
+        cents = spark.read.parquet(path + "/centroids")
+        probe_n, n_lists = n_probe, _centroid_count(cents, caller)
+    if kind in ("pq", "ivfpq"):
+        books = _load_codebooks(
+            spark.read.parquet(path + "/codebooks"), fp, caller
+        )
+    elif kind in ("matryoshka", "ivfmat"):
+        probe_dim = _require_stamped_probe_dim(
+            fp, path, _stored_dim(scan, "vp", scan_name, caller), caller,
+            True,
+        )
 
-        def _sl(k: int) -> int:
-            # the flat kinds' shared budget rule (the sinks' default)
-            if shortlist is not None:
-                return shortlist
-            return max(8 * k, n_corpus // 8)
-
-        if kind == "pq":
-            codebooks = _load_codebooks(
-                spark.read.parquet(path + "/codebooks")
+    def retrieve(batch: DataFrame, k: int):
+        sl = shortlist
+        if sl is None:
+            sl = max(8 * k, n_corpus * (probe_n or 1) // (8 * n_lists))
+        if kind in ("pq", "ivfpq"):
+            return _ivfpq_ranked_plan(
+                batch, scan, vecs, books, cents, k, probe_n, sl,
+                exclude_self,
             )
-            if int(fp["n_subspaces"]) != len(codebooks):
-                raise ValueError(
-                    f"{caller}: fingerprint stamps n_subspaces="
-                    f"{fp['n_subspaces']} but the stored codebooks span "
-                    f"{len(codebooks)} subspaces -- mixed artifact, rebuild"
-                )
-
-            def retrieve(batch: DataFrame, k: int):
-                return _pq_ranked_plan(
-                    batch, scan, vecs, codebooks, k, _sl(k), exclude_self
-                )
-
-        elif kind == "matryoshka":
-            probe_dim = _require_stamped_probe_dim(
-                spark, path, "matryoshka", "matryoshka",
-                _stored_dim(scan, "vp", "prefixes", caller), caller, fp=fp,
+        if kind in ("matryoshka", "ivfmat"):
+            return _ivfmat_ranked_plan(
+                batch, scan, vecs, cents, probe_dim, k, probe_n, sl,
+                exclude_self,
             )
+        # quant / ivfquant -- codes are self-describing, no width check
+        return _ivfquant_ranked_plan(
+            batch, scan, vecs, cents, k, probe_n, sl, exclude_self
+        )
 
-            def retrieve(batch: DataFrame, k: int):
-                return _matryoshka_ranked_plan(
-                    batch, scan, vecs, probe_dim, k, _sl(k), exclude_self
-                )
-
-        else:  # quant -- codes are self-describing, no width check
-
-            def retrieve(batch: DataFrame, k: int):
-                return _quant_ranked_plan(
-                    batch, scan, vecs, k, _sl(k), exclude_self
-                )
-
-        return retrieve, fp
-
-    raise ValueError(
-        f"{caller}: artifact at {path} is stamped kind={kind!r}, "
-        "not a servable dense index (expected ivfpq, ivfmat, ivfquant, "
-        "ivf, pq, matryoshka, or quant)"
-    )
+    return retrieve, fp
 
 
 def _resolve_dense_constituent(
@@ -3791,11 +3143,11 @@ def _resolve_dense_constituent(
     DEFAULTS to the same root, so the dense constituent can never
     rotate unpinned -- an explicit pin naming a DIFFERENT root
     refuses (a contradiction, not a second pin). Without it,
-    ``index_vecs`` is the brute scan and must be present. Returns
-    (pin_path, ann_retrieve, snapshot_nonce) -- the nonce from the
-    retriever's own fingerprint read, so the caller's pin snapshots
-    without a second read (r17 second review; None on the brute
-    path)."""
+    ``index_vecs`` is the brute scan (`_dense_cosine_topk`) and must
+    be present. Returns (pin_path, retrieve, snapshot_nonce):
+    ``retrieve(batch, k) -> (ranked, cleanup)`` either way, and the
+    nonce from the retriever's own fingerprint read, so the caller's
+    pin snapshots without a second read (None on the brute path)."""
     if ann_index_path is not None:
         if pin_path is not None and pin_path != ann_index_path:
             raise ValueError(
@@ -3813,7 +3165,13 @@ def _resolve_dense_constituent(
             f"{caller}: pass index_vecs (brute dense scan) or "
             "ann_index_path (ANN serving) -- got neither"
         )
-    return pin_path, None, None
+
+    def brute(batch: DataFrame, k: int):
+        return _dense_cosine_topk(
+            batch, index_vecs, k, exclude_self=exclude_self
+        ), None
+
+    return pin_path, brute, None
 
 
 def _write_index_fingerprint(spark: SparkSession, path: str, params: dict) -> None:
@@ -3846,41 +3204,35 @@ def index_fingerprint(spark: SparkSession, path: str) -> str:
     return rows[0]["nonce"]
 
 
-def _require_pin_target(
-    index_path: str | None, expected_fingerprint: str | None
-) -> None:
-    """A caller pinning a nonce without naming the index it pins gets
-    ZERO refresh protection (the fingerprint is only ever compared
-    against ``index_path``'s on-disk nonce) -- refuse loudly instead
-    of silently ignoring the pin (r13 ADVICE; applies to the whole
-    serving family, not just hybrid)."""
-    if expected_fingerprint is not None and index_path is None:
-        raise ValueError(
-            "expected_fingerprint was given without index_path: the pin "
-            "is checked against index_path's on-disk nonce, so without "
-            "one it protects nothing -- pass the index root too"
-        )
-
-
-def _kind_snapshot(
+def _pin_kind(
     spark: SparkSession,
     index_path: str | None,
+    expected_fingerprint: str | None,
     kind: str,
     display: str,
     caller: str,
-) -> str | None:
-    """The strict kind-stamped sinks' one-read preamble (r17 fourth
-    review: it had been hand-copied into six sinks -- the
-    `_load_codebooks` consolidation class): when a root is pinned,
-    verify it IS this kind of root (a pin on some OTHER artifact
-    passes every nonce check while the frames' true root rotates
-    unpinned -- r16 review) and return its nonce to seed
-    `_pin_index`'s unpinned snapshot. None when unpinned."""
-    if index_path is None:
-        return None
-    return _read_stamped_fingerprint(
-        spark, index_path, kind, display, caller
-    ).get("nonce")
+):
+    """`_pin_index` for the strictly kind-stamped sinks, in one
+    fingerprint read: when a root is named, verify it IS this kind of
+    root (a pin on some OTHER artifact passes every nonce check while
+    the frames' true root rotates unpinned) and seed the
+    unpinned snapshot from the same read. Returns (check, fp); ``fp``
+    is None when no root is named."""
+    fp = None
+    if index_path is not None:
+        fp = _read_stamped_fingerprint(
+            spark, index_path, kind, display, caller
+        )
+    check = _pin_index(
+        spark,
+        index_path,
+        expected_fingerprint,
+        f"{display} index at {{path}} was overwritten under a probe "
+        "stream (fingerprint {now} != snapshot {expected}); rebuild the "
+        "probe stream against the new index instead",
+        snapshot_nonce=None if fp is None else fp.get("nonce"),
+    )
+    return check, fp
 
 
 def _pin_index(
@@ -3892,20 +3244,26 @@ def _pin_index(
 ):
     """The serving family's whole nonce discipline in ONE place (the
     r13/r14 fixes each had to touch six hand-rolled copies): refuse a
-    pin with no target, verify a caller-held pin at CALL time (a
-    stale pin must fail before any stream starts), snapshot the
-    on-disk nonce when unpinned, and return a per-micro-batch
-    re-check callable (no-op when unpinned) that catches a same-name
-    in-place rewrite under a RUNNING query. ``message`` is the
-    site-specific failure text, formatted with {path}/{now}/{expected}
-    -- each stream kind keeps its own pinned wording. Pass
-    ``snapshot_nonce`` when the caller already read the root's
-    fingerprint (the `_require_root_kind` chain) to skip the second
-    snapshot read; it is used ONLY in the unpinned case -- a
-    caller-held pin is always verified against the disk at call
-    time."""
-    _require_pin_target(index_path, expected_fingerprint)
+    pin with no target (a nonce without the index it pins is never
+    compared against anything -- zero refresh protection), verify a
+    caller-held pin at CALL time (a stale pin must fail before any
+    stream starts), snapshot the on-disk nonce when unpinned, and
+    return a per-micro-batch re-check callable (no-op when unpinned)
+    that catches a same-name in-place rewrite under a RUNNING query.
+    ``message`` is the site-specific failure text, formatted with
+    {path}/{now}/{expected} -- each stream kind keeps its own pinned
+    wording. Pass ``snapshot_nonce`` when the caller already read the
+    root's fingerprint to skip the second snapshot read; it is used
+    ONLY in the unpinned case -- a caller-held pin is always verified
+    against the disk at call time."""
     if index_path is None:
+        if expected_fingerprint is not None:
+            raise ValueError(
+                "expected_fingerprint was given without index_path: the "
+                "pin is checked against index_path's on-disk nonce, so "
+                "without one it protects nothing -- pass the index root "
+                "too"
+            )
         return lambda sess: None
 
     expected = expected_fingerprint
@@ -3926,6 +3284,44 @@ def _pin_index(
     else:
         check(spark)
     return check
+
+
+def _serve_batches(
+    stream: DataFrame,
+    out_path: str,
+    checkpoint: str | None,
+    checks: list,
+    plan,
+):
+    """The ONE probe-stream driver every `*_batches` sink runs through
+    (the module docstring's probe protocol). Per micro-batch: run the
+    nonce ``checks`` (`_pin_index` callables), skip an empty batch,
+    append the frame of ``plan(batch, epoch) -> (frame, cleanup)`` to
+    ``out_path`` as parquet, then run ``cleanup`` (None when the plan
+    persisted nothing). The query is foreachBatch under an
+    availableNow trigger; ``checkpoint`` makes a restart resume
+    instead of re-appending. Returns the started StreamingQuery."""
+
+    def _emit(batch: DataFrame, epoch: int) -> None:
+        for check in checks:
+            check(batch.sparkSession)
+        if batch.isEmpty():
+            return
+        frame, cleanup = plan(batch, epoch)
+        try:
+            frame.write.mode("append").parquet(out_path)
+        finally:
+            if cleanup is not None:
+                cleanup()
+
+    writer = (
+        stream.writeStream.foreachBatch(_emit)
+        .outputMode("append")
+        .trigger(availableNow=True)
+    )
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.start()
 
 
 def ann_probe_stream(
@@ -4045,35 +3441,23 @@ def ann_topk_batches(
     index_path: str | None = None,
     expected_fingerprint: str | None = None,
 ):
-    """Per-micro-batch top-k writer for `ann_probe_stream` output
-    (foreachBatch, availableNow): the per-query ranking is COMPLETE
-    within the micro-batch that carries the query, because the
-    stream-static join produces every candidate of a query row in
-    that row's own batch -- so the per-batch window IS the final
-    per-query answer (window functions are not otherwise available on
-    a streaming DataFrame). Same (cos DESC, vec_id) tie order and
-    round-after-rank as the batch path. Returns the started
-    StreamingQuery; results land in ``out_path`` as parquet.
+    """Per-micro-batch top-k writer for `ann_probe_stream` output: the
+    per-query ranking is COMPLETE within the micro-batch that carries
+    the query, because the stream-static join produces every
+    candidate of a query row in that row's own batch -- so the
+    per-batch window IS the final per-query answer (window functions
+    are not otherwise available on a streaming DataFrame). Same (cos
+    DESC, vec_id) tie order and round-after-rank as the batch path.
 
-    Pass ``checkpoint`` for restartable runs: the parquet append is
-    NOT idempotent, so a retried/restarted micro-batch without a
-    checkpoint duplicates its top-k rows (fine for the availableNow
-    tests; unsafe as a long-running API without one).
-
-    Pass ``index_path`` (the `write_ann_index` root) to pin the index
+    ``index_path`` (the `write_ann_index` root) pins the index
     VERSION: the batch-local-candidates argument above holds only
-    while the index is static. ``expected_fingerprint`` is the nonce
-    the caller snapshotted when the probe plan was built (defaults to
-    the on-disk nonce at call time); a mismatch raises HERE, before
-    the stream starts -- a refresh must go through a new probe
-    stream, never under one (mid-stream mixing would split one
-    query's candidates across index versions silently). Each
-    micro-batch also re-checks the nonce, which catches a same-name
-    in-place rewrite under a RUNNING query; a Spark-written overwrite
-    mid-run is additionally loud without the pin, because part-file
-    names are unique per write and the stale file listing fails with
-    FAILED_READ_FILE (the engine executes the stream-static join
-    before the foreachBatch function runs, so the engine-level
+    while the index is static, so a refresh must go through a new
+    probe stream, never under one (mid-stream mixing would split one
+    query's candidates across index versions silently). A Spark-written
+    overwrite mid-run is additionally loud without the pin, because
+    part-file names are unique per write and the stale file listing
+    fails with FAILED_READ_FILE (the engine executes the stream-static
+    join before the foreachBatch function runs, so the engine-level
     failure wins the race -- observed, and pinned along with the
     other two behaviors by
     tests/test_streaming.py::test_streaming_ann_index_refresh_fails_loudly)."""
@@ -4088,7 +3472,7 @@ def ann_topk_batches(
             scored.sparkSession, index_path, "ann", "banded ANN",
             "ann_topk_batches",
         ).get("nonce")
-    _check = _pin_index(
+    check = _pin_index(
         scored.sparkSession,
         index_path,
         expected_fingerprint,
@@ -4097,15 +3481,12 @@ def ann_topk_batches(
         "stream against the new index instead",
         snapshot_nonce=snapshot,
     )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("_cos").desc(), F.col("vec_id")
+    )
 
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("_cos").desc(), F.col("vec_id")
-        )
-        (
+    def plan(batch: DataFrame, _epoch: int):
+        return (
             batch.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select(
@@ -4115,18 +3496,9 @@ def ann_topk_batches(
                 "rank",
                 F.round("_cos", 6).alias("cos_sim"),
             )
-            .write.mode("append")
-            .parquet(out_path)
-        )
+        ), None
 
-    writer = (
-        scored.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _serve_batches(scored, out_path, checkpoint, [check], plan)
 
 
 # --- streaming semantic (embedding) dedup probe ----------------------------
@@ -4383,14 +3755,8 @@ def semantic_verdict_batches(
     (self-probe of the corpus == `semantic_neardup`'s keep/dup_of
     columns row-for-row).
 
-    Pass ``checkpoint`` for restartable runs: the parquet append is
-    NOT idempotent, so a retried micro-batch without a checkpoint
-    duplicates verdict rows (fine for availableNow tests, unsafe as
-    a long-running API -- same note as `ann_topk_batches`). Pass
-    ``index_path`` (the `write_semantic_index` root) to pin the
-    index version -- same rules as `ann_topk_batches`: stale pin
-    refuses at call time, per-batch re-check catches in-place
-    rewrites -- and additionally to verify the probe's
+    ``index_path`` (the `write_semantic_index` root) pins the index
+    version and additionally verifies the probe's
     ``bands``/``rows_per_band``/``seed`` knobs against the stamped
     build knobs (`_require_stamped_knobs`; a same-ratio/wrong-seed
     probe would silently emit keep=true for every row)."""
@@ -4414,7 +3780,7 @@ def semantic_verdict_batches(
             optional_knobs=opt_knobs,
         )
         snapshot = fp.get("nonce")
-    _check = _pin_index(
+    check = _pin_index(
         embeddings.sparkSession,
         index_path,
         expected_fingerprint,
@@ -4427,10 +3793,7 @@ def semantic_verdict_batches(
         index_bands, index_vecs, knobs["bands"], "semantic_verdict_batches"
     )
 
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
+    def plan(batch: DataFrame, _epoch: int):
         hits = _semantic_probe_plan(
             batch, index_bands, index_vecs, threshold,
             bands, rows_per_band, dim, seed,
@@ -4440,26 +3803,11 @@ def semantic_verdict_batches(
             .groupBy("vec_id")
             .agg(F.min("index_vec_id").alias("dup_of"))
         )
-        (
-            batch.select("vec_id")
-            .join(drops, "vec_id", "left")
-            .select(
-                "vec_id",
-                F.col("dup_of").isNull().alias("keep"),
-                "dup_of",
-            )
-            .write.mode("append")
-            .parquet(out_path)
-        )
+        return batch.select("vec_id").join(drops, "vec_id", "left").select(
+            "vec_id", F.col("dup_of").isNull().alias("keep"), "dup_of"
+        ), None
 
-    writer = (
-        embeddings.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _serve_batches(embeddings, out_path, checkpoint, [check], plan)
 
 
 # --- streaming curation capstone: the FULL ladder over offline artifacts ---
@@ -4618,192 +3966,29 @@ def compact_curation_index(spark: SparkSession, path: str) -> str:
     increments' partial aggregates into one row per distinct text --
     bounds the probe-start merge (and the log's file count) after
     many `append_curation_index` calls. Pure optimization: the
-    reader-side merge in `_curation_verdict_plan` is already exact
+    reader-side merge in `curation_verdict_batches` is already exact
     without it, so compaction can run at any cadence (typically when
     the log's increment count or small-file count crosses a
     threshold).
 
-    Write discipline (r12, r11 ADVICE -- every crash point leaves a
-    recoverable exact table): the merged table lands in a temp dir,
-    the live dir is renamed to a BACKUP name, the temp dir is renamed
-    into place, and only then is the backup deleted (Hadoop
-    FileSystem API, so any supported storage works). Overwriting the
-    live directory in place would delete the merge plan's own lazily-
-    read input mid-write, and the old delete-then-rename left a crash
-    window with NO exact table at all. A crash now leaves one of:
-    temp only (live table untouched), backup+temp (recover by
-    renaming either back -- refused loudly on the next compaction
-    until resolved), or backup+live (merge complete; delete the
-    backup). The fingerprint is re-stamped: compaction changes the
-    on-disk fileset, and a probe stream's static plan holds the OLD
-    file listing, so pinned running streams must fail over exactly as
-    they do for appends (the band-side dirs would need the same
-    tmp+rename treatment if they ever grow a compaction; their rows
-    are per-doc facts with nothing to merge, so today only the
-    small-files motivation applies there and is left to the storage
-    layer)."""
-    live, tmp, backup = (
+    Write discipline: `_compact_parquet_dir`'s tmp/backup/rename swap
+    (every crash point leaves a recoverable exact
+    table; the merge reads the live dir lazily, so it lands in the
+    temp dir before the live dir moves aside). The fingerprint is
+    re-stamped: compaction changes the on-disk fileset, and a probe
+    stream's static plan holds the OLD file listing, so pinned
+    running streams must fail over exactly as they do for appends.
+    The band-side dirs hold per-doc facts with nothing to merge, so
+    only the small-files motivation applies there and is left to the
+    storage layer."""
+    _compact_parquet_dir(
+        spark,
         path + "/exact",
-        path + "/exact.compact-tmp",
-        path + "/exact.compact-backup",
-    )
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath(backup)):
-        raise IOError(
-            f"compact_curation_index: stale backup {backup} exists -- a "
-            f"previous compaction crashed mid-swap; restore it (rename to "
-            f"{live} if the live dir is missing, else delete it) first"
-        )
-    (
-        spark.read.parquet(live)
+        merged=spark.read.parquet(path + "/exact")
         .groupBy("text_hash")
-        .agg(F.min("min_doc_id").alias("min_doc_id"))
-        .write.mode("overwrite")
-        .parquet(tmp)
+        .agg(F.min("min_doc_id").alias("min_doc_id")),
     )
-    if not fs.rename(hpath(live), hpath(backup)):
-        raise IOError(
-            f"compact_curation_index: could not move {live} aside; live "
-            f"table untouched, merged table left at {tmp}"
-        )
-    if not fs.rename(hpath(tmp), hpath(live)):
-        restored = fs.rename(hpath(backup), hpath(live))
-        raise IOError(
-            f"compact_curation_index: swap-in rename failed; original "
-            f"table {'restored' if restored else f'left at {backup}'}, "
-            f"merged table left at {tmp}"
-        )
-    fs.delete(hpath(backup), True)
-    fp = spark.read.parquet(path + "/fingerprint").collect()[0].asDict()
-    fp.pop("nonce", None)
-    _write_index_fingerprint(spark, path, fp)
-    return path
-
-
-def _curation_verdict_plan(
-    batch: DataFrame,
-    exact_idx: DataFrame,
-    neardup_idx: DataFrame,
-    passages: DataFrame,
-    sem_bands: DataFrame,
-    sem_vecs: DataFrame,
-    embeddings: DataFrame,
-    quality_threshold: float,
-    neardup_threshold: float,
-    keep_lang: str,
-    max_repetition: float,
-    eval_source: str,
-    semantic_threshold: float,
-) -> DataFrame:
-    """One micro-batch of the FULL curation ladder, schema- and
-    value-identical to `curation.curation_pipeline_full` when the
-    artifacts were built from the corpus being replayed:
-
-      eval_holdout > contaminated > non_english > low_quality >
-      gopher_fail > repetitious > exact_duplicate > near_duplicate >
-      semantic_duplicate
-
-    Every reason is either a stateless per-row expression (the same
-    Column builders the batch ladder uses) or a probe against a
-    static artifact whose batch parity is individually pinned
-    (`neardup_probe_stream`, `contamination_probe_stream`,
-    `_semantic_probe_plan`, and the exact min-id table). Valid
-    per-batch because static-side joins make every signal of an
-    arriving row batch-local -- the same argument as the other
-    probes. `is_contaminated` is gated on source != eval_source,
-    mirroring the batch scan which scores only train docs (an eval
-    doc trivially contains its own passages)."""
-    from ..llmdata.text import repetition_score
-
-    qc = quality_columns(F.col("text"))
-    sig = batch.select(
-        "doc_id",
-        "text",
-        "source",
-        qc["n_tokens"].alias("n_tokens"),
-        qc["quality_score"].alias("quality_score"),
-        predicted_lang_column(F.col("text")).alias("predicted_lang"),
-        gopher_keep_column(F.col("text")).alias("_gopher_keep"),
-        F.md5(F.col("text")).alias("text_hash"),
-    )
-    rep = repetition_score(batch).select("doc_id", "repetition_rate")
-    cont = contamination_probe_stream(batch, passages, mode="exact").select(
-        "doc_id", F.col("is_contaminated").alias("_cont_hit")
-    )
-    nd = (
-        neardup_probe_stream(batch, neardup_idx, threshold=neardup_threshold)
-        .filter(F.col("index_doc_id") < F.col("doc_id"))
-        .select("doc_id")
-        .distinct()
-        .withColumn("_is_near_dup", F.lit(True))
-    )
-    embs = embeddings.select("vec_id", "embedding")
-    sem = (
-        _semantic_probe_plan(
-            batch.select("doc_id")
-            .join(embs, F.col("doc_id") == F.col("vec_id"))
-            .select("vec_id", "embedding"),
-            sem_bands,
-            sem_vecs,
-            semantic_threshold,
-            None,
-            None,
-            None,
-            42,
-        )
-        .filter(F.col("index_vec_id") < F.col("vec_id"))
-        .groupBy(F.col("vec_id").alias("doc_id"))
-        .agg(F.min("index_vec_id").alias("dup_of"))
-    )
-    # LSM-style merge of the exact-dup log: the table is append-only
-    # partial MIN aggregates (one full agg per build increment), so
-    # the probe re-aggregates -- a no-op for a one-shot build, the
-    # associative MIN merge for an appended one. One agg over the
-    # static side per stream start, keyed like the join that follows.
-    exact_merged = exact_idx.groupBy("text_hash").agg(
-        F.min("min_doc_id").alias("min_doc_id")
-    )
-    joined = (
-        sig.join(exact_merged, "text_hash", "left")
-        .join(rep, "doc_id")
-        .join(cont, "doc_id", "left")
-        .join(nd, "doc_id", "left")
-        .join(sem, "doc_id", "left")
-    )
-    is_cont = (F.col("source") != F.lit(eval_source)) & F.coalesce(
-        F.col("_cont_hit"), F.lit(False)
-    )
-    is_exact_dup = F.coalesce(
-        F.col("min_doc_id") < F.col("doc_id"), F.lit(False)
-    )
-    is_near_dup = F.coalesce(F.col("_is_near_dup"), F.lit(False))
-    is_sem_dup = F.col("dup_of").isNotNull()
-    reason = (
-        F.when(F.col("source") == eval_source, "eval_holdout")
-        .when(is_cont, "contaminated")
-        .when(F.col("predicted_lang") != keep_lang, "non_english")
-        .when(F.col("quality_score") < quality_threshold, "low_quality")
-        .when(~F.col("_gopher_keep"), "gopher_fail")
-        .when(F.col("repetition_rate") > max_repetition, "repetitious")
-        .when(is_exact_dup, "exact_duplicate")
-        .when(is_near_dup, "near_duplicate")
-        .when(is_sem_dup, "semantic_duplicate")
-    )
-    return joined.select(
-        "doc_id",
-        "predicted_lang",
-        "quality_score",
-        "n_tokens",
-        "repetition_rate",
-        is_cont.alias("is_contaminated"),
-        (~F.col("_gopher_keep")).alias("is_gopher_fail"),
-        is_sem_dup.alias("is_semantic_dup"),
-        "dup_of",
-        reason.alias("drop_reason"),
-        reason.isNull().alias("kept"),
-    )
+    return restamp_index(spark, path)
 
 
 def curation_verdict_batches(
@@ -4819,39 +4004,46 @@ def curation_verdict_batches(
     checkpoint: str | None = None,
 ):
     """Streaming FULL-curation capstone: every arriving document gets
-    the complete batch-ladder verdict (all nine drop reasons) by
-    probing the `write_curation_index` artifacts -- the streaming
-    counterpart of `curation.curation_pipeline_full`, closing the
-    capstone at full precedence (r10 item 1 took `semantic_duplicate`
-    streaming; this composes it into the whole ladder).
+    the complete batch-ladder verdict by probing the
+    `write_curation_index` artifacts -- the streaming counterpart of
+    `curation.curation_pipeline_full`, schema- and value-identical to
+    it when the artifacts were built from the corpus being replayed:
 
-    foreachBatch over the raw document stream
-    (`stream_documents_full` -- the ladder needs ``source``), one
-    verdict row per arrival via `_curation_verdict_plan`. Batch
+      eval_holdout > contaminated > non_english > low_quality >
+      gopher_fail > repetitious > exact_duplicate > near_duplicate >
+      semantic_duplicate
+
+    foreachBatch over the raw document stream (`stream_documents_full`
+    -- the ladder needs ``source``), one verdict row per arrival.
+    Every reason is either a stateless per-row expression (the same
+    Column builders the batch ladder uses) or a probe against a
+    static artifact whose batch parity is individually pinned
+    (`neardup_probe_stream`, `contamination_probe_stream`,
+    `_semantic_probe_plan`, and the exact min-id table) -- valid per
+    batch because static-side joins make every signal of an arriving
+    row batch-local. `is_contaminated` is gated on source !=
+    eval_source, mirroring the batch scan which scores only train
+    docs (an eval doc trivially contains its own passages). Batch
     parity pinned by
-    tests/test_streaming.py::test_streaming_curation_full_matches_batch
-    (replaying the corpus the artifacts were built from reproduces
-    `curation_pipeline_full` row-for-row, every column). The root
-    fingerprint is snapshotted at call time and re-checked per batch:
-    a mid-stream artifact rebuild fails loudly (`index_fingerprint`
-    rule). The exact-mode contamination set is re-collected per
-    micro-batch (eval suites are tiny); a long-running deployment
-    hoists the Bloom build outside the loop
-    (`contamination_probe_stream(mode="bloom")`) and accepts its
-    documented conservative-approximate semantics.
+    tests/test_streaming.py::test_streaming_curation_full_matches_batch.
 
-    ``checkpoint``: same non-idempotent-append note as the other
-    foreachBatch writers. Storage lifecycle: the persisted artifact
-    frames live until the session drops them -- a host that starts
-    many verdict streams against different roots should unpersist
-    the previous stream's frames (or `spark.catalog.clearCache()`)
-    when a stream finishes; executor storage is index-sized per
-    root."""
+    The root is REQUIRED and always pinned: its nonce is snapshotted
+    at call time and re-checked per batch. The exact-mode
+    contamination set is re-collected per micro-batch (eval suites
+    are tiny); a long-running deployment hoists the Bloom build
+    outside the loop (`contamination_probe_stream(mode="bloom")`) and
+    accepts its documented conservative-approximate semantics.
+    Storage lifecycle: the persisted artifact frames live until the
+    session drops them -- a host that starts many verdict streams
+    against different roots should unpersist the previous stream's
+    frames (or `spark.catalog.clearCache()`) when a stream finishes;
+    executor storage is index-sized per root."""
     from ..llmdata.curation import (
         DEFAULT_KEEP_LANG,
         DEFAULT_NEARDUP_JACCARD,
         DEFAULT_QUALITY_THRESHOLD,
     )
+    from ..llmdata.text import repetition_score
 
     quality_threshold = (
         DEFAULT_QUALITY_THRESHOLD if quality_threshold is None else quality_threshold
@@ -4862,20 +4054,29 @@ def curation_verdict_batches(
     keep_lang = DEFAULT_KEEP_LANG if keep_lang is None else keep_lang
 
     spark = docs.sparkSession
-    # the root is REQUIRED here; verify it IS a curation root before
-    # snapshotting its nonce (migration-tolerant: pre-r17 stamps carry
-    # no kind -- `_require_root_kind`); the read fingerprint IS the
-    # snapshot -- one read (r17 review)
-    expected = _require_root_kind(
-        spark, index_path, "curation", "curation",
-        "curation_verdict_batches",
-    )["nonce"]
+    # verify the root IS a curation root before snapshotting its nonce
+    # (migration-tolerant: pre-r17 stamps carry no kind --
+    # `_require_root_kind`); the read fingerprint IS the snapshot
+    check = _pin_index(
+        spark,
+        index_path,
+        None,
+        "curation index at {path} was overwritten under a running "
+        "verdict stream (fingerprint {now} != snapshot {expected}); "
+        "rebuild the verdict stream against the new artifacts instead",
+        snapshot_nonce=_require_root_kind(
+            spark, index_path, "curation", "curation",
+            "curation_verdict_batches",
+        )["nonce"],
+    )
     # persist every static side ONCE: a stream-static join re-executes
     # the static plan every micro-batch, so without this each batch
     # re-scans the artifact parquet (and re-runs the exact-log merge).
     # Persisted, the per-batch cost is a memory read; the artifacts are
     # index-sized, the same storage class the batch engine persists for
-    # its build-once-probe-many indexes (dedup._plan_cached).
+    # its build-once-probe-many indexes (dedup._plan_cached). The
+    # exact table is an append-only log of partial MIN aggregates, so
+    # it is merged here (the LSM read side of `append_curation_index`).
     exact_idx = (
         spark.read.parquet(index_path + "/exact")
         .groupBy("text_hash")
@@ -4888,45 +4089,89 @@ def curation_verdict_batches(
     sem_vecs = spark.read.parquet(index_path + "/sem/vecs").persist()
     embeddings = spark.read.parquet(index_path + "/sem/embeddings").persist()
 
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        now = index_fingerprint(batch.sparkSession, index_path)
-        if now != expected:
-            raise RuntimeError(
-                f"curation index at {index_path} was overwritten under a "
-                f"running verdict stream (fingerprint {now} != snapshot "
-                f"{expected}); rebuild the verdict stream against the new "
-                "artifacts instead"
+    def plan(batch: DataFrame, _epoch: int):
+        qc = quality_columns(F.col("text"))
+        sig = batch.select(
+            "doc_id",
+            "text",
+            "source",
+            qc["n_tokens"].alias("n_tokens"),
+            qc["quality_score"].alias("quality_score"),
+            predicted_lang_column(F.col("text")).alias("predicted_lang"),
+            gopher_keep_column(F.col("text")).alias("_gopher_keep"),
+            F.md5(F.col("text")).alias("text_hash"),
+        )
+        rep = repetition_score(batch).select("doc_id", "repetition_rate")
+        cont = contamination_probe_stream(
+            batch, passages, mode="exact"
+        ).select("doc_id", F.col("is_contaminated").alias("_cont_hit"))
+        nd = (
+            neardup_probe_stream(
+                batch, neardup_idx, threshold=neardup_threshold
             )
-        if batch.isEmpty():
-            return
-        (
-            _curation_verdict_plan(
-                batch,
-                exact_idx,
-                neardup_idx,
-                passages,
+            .filter(F.col("index_doc_id") < F.col("doc_id"))
+            .select("doc_id")
+            .distinct()
+            .withColumn("_is_near_dup", F.lit(True))
+        )
+        sem = (
+            _semantic_probe_plan(
+                batch.select("doc_id")
+                .join(embeddings, F.col("doc_id") == F.col("vec_id"))
+                .select("vec_id", "embedding"),
                 sem_bands,
                 sem_vecs,
-                embeddings,
-                quality_threshold,
-                neardup_threshold,
-                keep_lang,
-                max_repetition,
-                eval_source,
                 semantic_threshold,
+                None,
+                None,
+                None,
+                42,
             )
-            .write.mode("append")
-            .parquet(out_path)
+            .filter(F.col("index_vec_id") < F.col("vec_id"))
+            .groupBy(F.col("vec_id").alias("doc_id"))
+            .agg(F.min("index_vec_id").alias("dup_of"))
         )
+        joined = (
+            sig.join(exact_idx, "text_hash", "left")
+            .join(rep, "doc_id")
+            .join(cont, "doc_id", "left")
+            .join(nd, "doc_id", "left")
+            .join(sem, "doc_id", "left")
+        )
+        is_cont = (F.col("source") != F.lit(eval_source)) & F.coalesce(
+            F.col("_cont_hit"), F.lit(False)
+        )
+        is_exact_dup = F.coalesce(
+            F.col("min_doc_id") < F.col("doc_id"), F.lit(False)
+        )
+        is_near_dup = F.coalesce(F.col("_is_near_dup"), F.lit(False))
+        is_sem_dup = F.col("dup_of").isNotNull()
+        reason = (
+            F.when(F.col("source") == eval_source, "eval_holdout")
+            .when(is_cont, "contaminated")
+            .when(F.col("predicted_lang") != keep_lang, "non_english")
+            .when(F.col("quality_score") < quality_threshold, "low_quality")
+            .when(~F.col("_gopher_keep"), "gopher_fail")
+            .when(F.col("repetition_rate") > max_repetition, "repetitious")
+            .when(is_exact_dup, "exact_duplicate")
+            .when(is_near_dup, "near_duplicate")
+            .when(is_sem_dup, "semantic_duplicate")
+        )
+        return joined.select(
+            "doc_id",
+            "predicted_lang",
+            "quality_score",
+            "n_tokens",
+            "repetition_rate",
+            is_cont.alias("is_contaminated"),
+            (~F.col("_gopher_keep")).alias("is_gopher_fail"),
+            is_sem_dup.alias("is_semantic_dup"),
+            "dup_of",
+            reason.alias("drop_reason"),
+            reason.isNull().alias("kept"),
+        ), None
 
-    writer = (
-        docs.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _serve_batches(docs, out_path, checkpoint, [check], plan)
 
 
 # --- streaming retrieve-then-rerank (the RAG serving pattern) --------------
@@ -5028,10 +4273,9 @@ def rerank_topk_batches(
     (score DESC, vec_id) ties -- batch parity pinned by
     tests/test_streaming.py::test_streaming_rerank_matches_batch.
     The injectable-model slot (``model_stub=False``) raises in this
-    container, exactly like the batch path. Same ``checkpoint`` /
-    ``index_path`` pinning semantics as `ann_topk_batches`; the
-    expensive model forward pass stays Arrow-batched, so a GPU-backed
-    scorer slots in without plan changes."""
+    container, exactly like the batch path. The expensive model
+    forward pass stays Arrow-batched, so a GPU-backed scorer slots in
+    without plan changes."""
     from pyspark.sql import Window
 
     from ..llmdata.similarity import (
@@ -5072,7 +4316,7 @@ def rerank_topk_batches(
             optional_knobs={"dim": dim},
         )
         snapshot = fp.get("nonce")
-    _check = _pin_index(
+    check = _pin_index(
         queries.sparkSession,
         index_path,
         expected_fingerprint,
@@ -5081,11 +4325,11 @@ def rerank_topk_batches(
         "stream against the new index instead",
         snapshot_nonce=snapshot,
     )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("rerank_score").desc(), F.col("vec_id")
+    )
 
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
+    def plan(batch: DataFrame, _epoch: int):
         qs = _signed_corpus(batch, n_bits, dim, seed).select(
             F.col("vec_id").alias("query_id"),
             F.col("vec").alias("qvec"),
@@ -5104,25 +4348,13 @@ def rerank_topk_batches(
                 ),
             )
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("rerank_score").desc(), F.col("vec_id")
-        )
-        (
+        return (
             scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("query_id", "vec_id", "label", "rank", "rerank_score")
-            .write.mode("append")
-            .parquet(out_path)
-        )
+        ), None
 
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _serve_batches(queries, out_path, checkpoint, [check], plan)
 
 
 def _dense_cosine_topk(
@@ -5205,11 +4437,9 @@ def knn_classify_batches(
     by tests/test_streaming.py::test_streaming_knn_classify_matches_batch.
 
     Output: (query_id, predicted_label, votes) per arriving query.
-    Same ``checkpoint`` append-idempotency and ``index_path`` /
-    ``expected_fingerprint`` nonce discipline as the rest of the
-    serving family (r14: it was the one member without the refresh
-    guard -- a vecs rebuild under a running classify stream would
-    silently mix corpus versions across micro-batches).
+    ``index_path`` pins the vecs root (r14: a vecs rebuild under a
+    running classify stream would otherwise silently mix corpus
+    versions across micro-batches).
 
     ``exclude_self`` defaults True -- the leave-one-out rule the batch
     twin `knn_label_vote` pins parity against (queries replayed FROM
@@ -5233,12 +4463,11 @@ def knn_classify_batches(
     pin)."""
     from pyspark.sql import Window
 
-    index_path, ann_retrieve, snapshot = _resolve_dense_constituent(
+    index_path, retrieve, snapshot = _resolve_dense_constituent(
         queries.sparkSession, index_vecs, ann_index_path, index_path,
         n_probe, ann_shortlist, exclude_self, "knn_classify_batches",
     )
-
-    _check = _pin_index(
+    check = _pin_index(
         queries.sparkSession,
         index_path,
         expected_fingerprint,
@@ -5247,48 +4476,24 @@ def knn_classify_batches(
         "against the new index instead",
         snapshot_nonce=snapshot,
     )
+    wv = Window.partitionBy("query_id").orderBy(
+        F.col("votes").desc(), F.col("label")
+    )
 
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        cleanup = None
-        if ann_retrieve is not None:
-            topk, cleanup = ann_retrieve(batch, k)
-        else:
-            topk = _dense_cosine_topk(
-                batch, index_vecs, k, exclude_self=exclude_self
-            )
+    def plan(batch: DataFrame, _epoch: int):
+        topk, cleanup = retrieve(batch, k)
         votes = topk.groupBy("query_id", "label").agg(
             F.count(F.lit(1)).alias("votes")
         )
-        wv = Window.partitionBy("query_id").orderBy(
-            F.col("votes").desc(), F.col("label")
-        )
-        try:
-            (
-                votes.withColumn("_r", F.row_number().over(wv))
-                .filter(F.col("_r") == 1)
-                .select(
-                    "query_id",
-                    F.col("label").alias("predicted_label"),
-                    "votes",
-                )
-                .write.mode("append")
-                .parquet(out_path)
+        return (
+            votes.withColumn("_r", F.row_number().over(wv))
+            .filter(F.col("_r") == 1)
+            .select(
+                "query_id", F.col("label").alias("predicted_label"), "votes"
             )
-        finally:
-            if cleanup is not None:
-                cleanup()
+        ), cleanup
 
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _serve_batches(queries, out_path, checkpoint, [check], plan)
 
 
 def hybrid_rrf_batches(
@@ -5329,13 +4534,11 @@ def hybrid_rrf_batches(
     artifacts (the collected lexical list, the signed corpus), a
     corpus/index refresh under a running stream would silently mix
     index versions in the fused output -- pass ``index_path`` (and
-    optionally the pinned ``expected_fingerprint``) to get the same
-    loud per-batch failover the rest of the serving family has
-    (`ann_topk_batches` / `rerank_topk_batches` nonce discipline).
+    optionally the pinned ``expected_fingerprint``) to get the loud
+    per-batch failover of the serving protocol.
 
     Output: (query_id, doc_id, lex_rank, cos_rank, rrf_score), top_k
-    rows per arriving query. Same ``checkpoint`` append-idempotency
-    note as the other writers.
+    rows per arriving query.
 
     Pass ``ann_index_path`` (any servable dense root, seven kinds --
     see `_ann_dense_retriever`) to
@@ -5358,12 +4561,11 @@ def hybrid_rrf_batches(
     fusion_k = HYBRID_FUSION_K if fusion_k is None else fusion_k
     top_k = HYBRID_TOP_K if top_k is None else top_k
 
-    index_path, ann_retrieve, snapshot = _resolve_dense_constituent(
+    index_path, retrieve, snapshot = _resolve_dense_constituent(
         queries.sparkSession, index_vecs, ann_index_path, index_path,
         n_probe, ann_shortlist, True, "hybrid_rrf_batches",
     )
-
-    _check = _pin_index(
+    check = _pin_index(
         queries.sparkSession,
         index_path,
         expected_fingerprint,
@@ -5373,57 +4575,36 @@ def hybrid_rrf_batches(
         "the stream against the new index instead",
         snapshot_nonce=snapshot,
     )
-
     lex_rows = [
         (int(r["doc_id"]), int(r["lex_rank"]))
         for r in lex_ranked(docs, fusion_k).collect()
     ]
+    wf = Window.partitionBy("query_id").orderBy(
+        F.col("rrf_score").desc(), F.col("doc_id")
+    )
 
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        sess = batch.sparkSession
-        lex = sess.createDataFrame(lex_rows, "doc_id long, lex_rank int")
-        cleanup = None
-        if ann_retrieve is not None:
-            ranked, cleanup = ann_retrieve(batch, fusion_k)
-        else:
-            ranked = _dense_cosine_topk(batch, index_vecs, fusion_k)
+    def plan(batch: DataFrame, _epoch: int):
+        lex = batch.sparkSession.createDataFrame(
+            lex_rows, "doc_id long, lex_rank int"
+        )
+        ranked, cleanup = retrieve(batch, fusion_k)
         dense = ranked.select(
             "query_id",
             F.col("vec_id").alias("doc_id"),
             F.col("rank").alias("cos_rank"),
         )
         qids = batch.select(F.col("vec_id").alias("query_id")).distinct()
-        lex_per_q = qids.crossJoin(F.broadcast(lex))
-        fused = lex_per_q.join(dense, ["query_id", "doc_id"], "full_outer")
-        wf = Window.partitionBy("query_id").orderBy(
-            F.col("rrf_score").desc(), F.col("doc_id")
+        fused = qids.crossJoin(F.broadcast(lex)).join(
+            dense, ["query_id", "doc_id"], "full_outer"
         )
-        try:
-            (
-                fused.withColumn("rrf_score", F.expr(_rrf_score_sql()))
-                .withColumn("_r", F.row_number().over(wf))
-                .filter(F.col("_r") <= top_k)
-                .select(
-                    "query_id", "doc_id", "lex_rank", "cos_rank", "rrf_score"
-                )
-                .write.mode("append")
-                .parquet(out_path)
-            )
-        finally:
-            if cleanup is not None:
-                cleanup()
+        return (
+            fused.withColumn("rrf_score", F.expr(_rrf_score_sql()))
+            .withColumn("_r", F.row_number().over(wf))
+            .filter(F.col("_r") <= top_k)
+            .select("query_id", "doc_id", "lex_rank", "cos_rank", "rrf_score")
+        ), cleanup
 
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _serve_batches(queries, out_path, checkpoint, [check], plan)
 
 
 # --- streaming source-drift monitoring (baseline artifact + probe) ---------
@@ -5540,39 +4721,29 @@ def drift_verdict_batches(
 
     ``expected_fingerprint``: a supervisor restarting the probe
     passes the nonce it pinned at deployment time, so a baseline
-    rebuild across the restart is caught too (the default snapshots
-    the nonce at call time, which only guards WITHIN one run).
-
-    """
+    rebuild across the restart is caught too -- at the first batch,
+    like a rebuild under the running stream (the default snapshots
+    the nonce at call time, which only guards WITHIN one run)."""
     spark = embs_sourced.sparkSession
-    expected = expected_fingerprint or index_fingerprint(spark, baseline_path)
-    baseline = spark.read.parquet(baseline_path + "/means").persist()
-
-    def _emit(batch: DataFrame, epoch: int) -> None:
-        now = index_fingerprint(batch.sparkSession, baseline_path)
-        if now != expected:
-            raise RuntimeError(
-                f"drift baseline at {baseline_path} was rebuilt under a "
-                f"running probe stream (fingerprint {now} != snapshot "
-                f"{expected}); restart the stream against the new baseline"
-            )
-        if batch.isEmpty():
-            return
-        (
-            drift_against_baseline(batch, baseline)
-            .withColumn("batch_id", F.lit(epoch).cast("long"))
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    writer = (
-        embs_sourced.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
+    check = _pin_index(
+        spark,
+        baseline_path,
+        None,
+        "drift baseline at {path} was rebuilt under a running probe "
+        "stream (fingerprint {now} != snapshot {expected}); restart the "
+        "stream against the new baseline",
+        snapshot_nonce=expected_fingerprint,
     )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    baseline = spark.read.parquet(baseline_path + "/means").persist()
+    return _serve_batches(
+        embs_sourced, out_path, checkpoint, [check],
+        lambda batch, epoch: (
+            drift_against_baseline(batch, baseline).withColumn(
+                "batch_id", F.lit(epoch).cast("long")
+            ),
+            None,
+        ),
+    )
 
 
 # --- streaming leakage-safe split (assignment serving, r14) -----------------
@@ -5715,11 +4886,7 @@ def split_verdict_batches(
     micro-batches each resolve independently against the corpus and
     may straddle if neither hits it; (b) an arrival bridging two
     existing clusters inherits the smaller label, but cannot
-    retroactively merge the clusters' previously drawn splits.
-
-    Same ``checkpoint`` append-idempotency and ``index_path`` /
-    ``expected_fingerprint`` nonce discipline as the rest of the
-    serving family."""
+    retroactively merge the clusters' previously drawn splits."""
     from ..llmdata.curation import SPLIT_SALT, split_assignment_column
     from ..llmdata.dedup import _label_components, neardup_pairs
 
@@ -5772,7 +4939,7 @@ def split_verdict_batches(
                 "match the knobs"
             )
 
-    _check = _pin_index(
+    check = _pin_index(
         docs.sparkSession,
         index_path,
         expected_fingerprint,
@@ -5799,10 +4966,7 @@ def split_verdict_batches(
         .select("band_idx", "band_hash")
     )
 
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
+    def plan(batch: DataFrame, _epoch: int):
         hits = neardup_probe_stream(
             batch, index_bands, threshold, max_bucket_size
         )
@@ -5814,7 +4978,7 @@ def split_verdict_batches(
         # persisted: the limit-collect below and (over the cap) the
         # propagation rounds both consume this plan -- without the
         # persist the fallback re-runs LSH banding + Jaccard verify
-        # from scratch (r15 review); released in the finally after the
+        # from scratch; released by `_serve_batches` after the
         # batch's write
         bpairs = (
             neardup_pairs(
@@ -5826,6 +4990,15 @@ def split_verdict_batches(
             .select("doc_a", "doc_b")
             .persist()
         )
+        try:
+            return labeled(batch, bpairs, inherited), bpairs.unpersist
+        except BaseException:
+            bpairs.unpersist()
+            raise
+
+    def labeled(
+        batch: DataFrame, bpairs: DataFrame, inherited: DataFrame
+    ) -> DataFrame:
         # one bounded action replaces the old isEmpty() probe AND, for
         # graphs under the cap (every realistic micro-batch -- the
         # graph is batch-local, never corpus-sized), the O(log d)
@@ -5837,14 +5010,6 @@ def split_verdict_batches(
         # back as a batch-bounded frame. Over the cap (a micro-batch
         # trigger admitting ~100k intra-batch near-dup pairs), fall
         # back to the distributed rounds.
-        try:
-            _emit_labeled(batch, bpairs, inherited)
-        finally:
-            bpairs.unpersist()
-
-    def _emit_labeled(
-        batch: DataFrame, bpairs: DataFrame, inherited: DataFrame
-    ) -> None:
         edges = bpairs.limit(_SPLIT_SMALL_GRAPH_CAP + 1).collect()
         if not edges:
             # identity labels are exactly the fixpoint on an empty
@@ -5888,22 +5053,11 @@ def split_verdict_batches(
                 ),
             )
         )
-        (
-            assigned.withColumn(
-                "split", split_assignment_column(F.col("cluster_id"), salt)
-            )
-            .write.mode("append")
-            .parquet(out_path)
+        return assigned.withColumn(
+            "split", split_assignment_column(F.col("cluster_id"), salt)
         )
 
-    writer = (
-        docs.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _serve_batches(docs, out_path, checkpoint, [check], plan)
 
 
 def append_split_index(
@@ -5985,7 +5139,6 @@ def append_split_index(
             "exactly the verdicts for this delta (a stale or too-wide "
             "assignments frame would append labels with no band rows)"
         )
-    spark = new_docs.sparkSession
     write_neardup_index(new_docs, path + "/bands", mode="append")
     (
         assignments.select("doc_id", "cluster_id")
@@ -5994,11 +5147,8 @@ def append_split_index(
     )
     # re-stamp WITHOUT losing the build-knob stamps (threshold/cap):
     # the serve-time knob check reads them, and an append changes only
-    # the nonce, never the knobs (the compact_curation_index pattern)
-    fp = spark.read.parquet(path + "/fingerprint").collect()[0].asDict()
-    fp.pop("nonce", None)
-    _write_index_fingerprint(spark, path, fp)
-    return path
+    # the nonce, never the knobs
+    return restamp_index(new_docs.sparkSession, path)
 
 
 def split_verdicts_with_cadence(
@@ -6383,45 +5533,20 @@ def bm25_topk_batches(
     form's query_terms). A query whose terms match nothing emits no
     rows. Scale: the query side is batch-sized and broadcasts; the
     postings join prunes to the term buckets the batch touches; the
-    stats row is a 1-row broadcast. Same ``checkpoint`` /
-    ``index_path`` discipline as the rest of the serving family; a
-    TORN postings/stats artifact refuses here, at construction
-    (`_require_bm25_untorn` -- the shortlist family's rule)."""
-    # kind-checked one-read snapshot (`_kind_snapshot`): the pin
-    # names a root -- verify it IS this kind of root and seed the
-    # unpinned nonce snapshot from the same read
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "bm25 index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=_kind_snapshot(
-            queries.sparkSession, index_path, "bm25", "bm25",
-            "bm25_topk_batches",
-        ),
+    stats row is a 1-row broadcast. A TORN postings/stats artifact
+    refuses here, at construction (`_require_bm25_untorn` -- the
+    shortlist family's rule)."""
+    check, _ = _pin_kind(
+        queries.sparkSession, index_path, expected_fingerprint,
+        "bm25", "bm25", "bm25_topk_batches",
     )
     _require_bm25_untorn(postings, stats, "bm25_topk_batches")
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        (
-            _bm25_ranked_plan(batch, postings, stats, k)
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
+    return _serve_batches(
+        queries, out_path, checkpoint, [check],
+        lambda batch, _epoch: (
+            _bm25_ranked_plan(batch, postings, stats, k), None
+        ),
     )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def hybrid_rrf_keyword_batches(
@@ -6470,8 +5595,7 @@ def hybrid_rrf_keyword_batches(
     root -- pin both when they live under separate directories (r14
     verdict item 5: one pinned root let the other rotate silently
     under a running stream). A single shared root still works: pass
-    it as ``index_path`` and leave the vecs pair None. Same
-    ``checkpoint`` semantics as the family.
+    it as ``index_path`` and leave the vecs pair None.
 
     Pass ``ann_index_path`` (any servable dense root, seven kinds --
     the retriever dispatches on the stamped kind, `_ann_dense_retriever`) to serve the DENSE
@@ -6496,16 +5620,14 @@ def hybrid_rrf_keyword_batches(
     fusion_k = HYBRID_FUSION_K if fusion_k is None else fusion_k
     top_k = HYBRID_TOP_K if top_k is None else top_k
 
-    vecs_index_path, ann_retrieve, vecs_snapshot = (
-        _resolve_dense_constituent(
-            queries.sparkSession, index_vecs, ann_index_path,
-            vecs_index_path, n_probe, ann_shortlist, False,
-            "hybrid_rrf_keyword_batches",
-        )
+    vecs_index_path, retrieve, vecs_snapshot = _resolve_dense_constituent(
+        queries.sparkSession, index_vecs, ann_index_path,
+        vecs_index_path, n_probe, ann_shortlist, False,
+        "hybrid_rrf_keyword_batches",
     )
     # pin-target contract first (a caller error), artifact-state torn
     # guard second -- the family precedence rule
-    _check_lex = _pin_index(
+    check_lex = _pin_index(
         queries.sparkSession,
         index_path,
         expected_fingerprint,
@@ -6513,7 +5635,7 @@ def hybrid_rrf_keyword_batches(
         "probe stream (fingerprint {now} != snapshot {expected}); rebuild "
         "the probe stream against the new index instead",
     )
-    _check_vecs = _pin_index(
+    check_vecs = _pin_index(
         queries.sparkSession,
         vecs_index_path,
         vecs_expected_fingerprint,
@@ -6523,52 +5645,31 @@ def hybrid_rrf_keyword_batches(
         snapshot_nonce=vecs_snapshot,
     )
     _require_bm25_untorn(postings, stats, "hybrid_rrf_keyword_batches")
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("rrf_score").desc(), F.col("doc_id")
+    )
 
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check_lex(batch.sparkSession)
-        _check_vecs(batch.sparkSession)
-        if batch.isEmpty():
-            return
+    def plan(batch: DataFrame, _epoch: int):
         lex = _bm25_ranked_plan(
             batch.select("query_id", "keywords"), postings, stats, fusion_k
         ).select("query_id", "doc_id", F.col("rank").alias("lex_rank"))
-        cleanup = None
-        qside = batch.select(F.col("query_id").alias("vec_id"), "embedding")
-        if ann_retrieve is not None:
-            ranked, cleanup = ann_retrieve(qside, fusion_k)
-        else:
-            ranked = _dense_cosine_topk(
-                qside, index_vecs, fusion_k, exclude_self=False
-            )
+        ranked, cleanup = retrieve(
+            batch.select(F.col("query_id").alias("vec_id"), "embedding"),
+            fusion_k,
+        )
         dense = ranked.select(
             "query_id",
             F.col("vec_id").alias("doc_id"),
             F.col("rank").alias("cos_rank"),
         )
         fused = lex.join(dense, ["query_id", "doc_id"], "full_outer")
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("rrf_score").desc(), F.col("doc_id")
-        )
-        try:
-            (
-                fused.withColumn("rrf_score", F.expr(_rrf_score_sql()))
-                .withColumn("_r", F.row_number().over(w))
-                .filter(F.col("_r") <= top_k)
-                .select(
-                    "query_id", "doc_id", "lex_rank", "cos_rank", "rrf_score"
-                )
-                .write.mode("append")
-                .parquet(out_path)
-            )
-        finally:
-            if cleanup is not None:
-                cleanup()
+        return (
+            fused.withColumn("rrf_score", F.expr(_rrf_score_sql()))
+            .withColumn("_r", F.row_number().over(w))
+            .filter(F.col("_r") <= top_k)
+            .select("query_id", "doc_id", "lex_rank", "cos_rank", "rrf_score")
+        ), cleanup
 
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
+    return _serve_batches(
+        queries, out_path, checkpoint, [check_lex, check_vecs], plan
     )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()

@@ -53,10 +53,12 @@ def temporal_batch_stream_annotated(
     emits each element).
 
     Shape: window agg collecting the row structs, then explode after
-    the window closes. Scale note: the buffered state is bounded by
-    one second of arrivals per key -- at extreme per-second rates use
-    ``temporal_batch_stream`` (count-only, no row buffering) and join
-    the size back downstream.
+    the window closes -- ONE streaming query, the shape `full_stream`
+    needs (a count-only aggregate joined back to the rows would take a
+    second query and an intermediate sink, since Spark cannot join an
+    aggregated stream inside one query). Scale note: the buffered
+    state is one second of arrivals per (window, timestamp_key) key,
+    held until the watermark closes the window.
     """
     valid = silver.filter(F.col("status") == "valid")
     cols = [c for c in valid.columns]
@@ -82,100 +84,6 @@ def temporal_batch_stream_annotated(
         "temporal_batch_size",
         F.lit("compliant").alias("temporal_ordering"),
     )
-
-
-def temporal_counts_to_files(
-    silver: DataFrame,
-    path: str,
-    checkpoint: str,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    available_now: bool = True,
-):
-    """Phase 1 of the scale-safe annotated W4: write the per-second
-    count aggregate (no row buffering) to a parquet directory that
-    phase 2 re-reads as a stream. Returns the started StreamingQuery.
-
-    The window struct is flattened to (window_start, window_end) so the
-    file-stream schema round-trips."""
-    counts = temporal_batch_stream(silver, cfg).select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "timestamp_key",
-        "temporal_batch_size",
-        "temporal_ordering",
-    )
-    writer = (
-        counts.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_temporal_counts(spark, path: str) -> DataFrame:
-    """Phase-2 reader for the counts directory written by
-    `temporal_counts_to_files`."""
-    schema = (
-        "window_start timestamp, window_end timestamp, timestamp_key string, "
-        "temporal_batch_size bigint, temporal_ordering string"
-    )
-    return spark.readStream.schema(schema).parquet(path)
-
-
-def temporal_annotated_rejoin(
-    silver: DataFrame,
-    counts: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Scale-safe annotated W4: stream-stream join of the record
-    stream with the closed-window count stream (from
-    `stream_temporal_counts`) -- every record re-emitted with its final
-    same-second batch size, NO ``collect_list``.
-
-    Why this shape: Spark cannot join an aggregated streaming DF with
-    another stream inside one query, so the count aggregate runs as its
-    own query into an intermediate sink (parquet here; a compacted
-    Kafka topic at scale) and joins back as a plain append stream.
-    Versus `temporal_batch_stream_annotated` (reference-faithful
-    collect_list) the state story changes from ONE monolithic array
-    value per hot second -- which must deserialize as a single object
-    and can spike an executor -- to per-row join-state entries in the
-    state store (RocksDB-spillable, evicted by the watermark once the
-    window passes). The join carries the canonical event-time RANGE
-    condition (row.event_time in [window_start, window_end)) on top of
-    the timestamp_key equality -- a derived window-struct column would
-    be a second event-time column on the row side, which Spark rejects;
-    the range form is what the symmetric hash join uses to compute the
-    state watermark and clean up."""
-    valid = silver.filter(F.col("status") == "valid")
-    rows = valid.withWatermark(
-        "event_time", f"{cfg.watermark_seconds} seconds"
-    ).withColumn("timestamp_key", F.substring("timestamp", 1, 19))
-    c = counts.withWatermark(
-        "window_start", f"{cfg.watermark_seconds} seconds"
-    ).select(
-        "window_start",
-        "window_end",
-        F.col("timestamp_key").alias("_ck"),
-        "temporal_batch_size",
-        "temporal_ordering",
-    )
-    joined = rows.join(
-        c,
-        (rows["timestamp_key"] == c["_ck"])
-        & (rows["event_time"] >= c["window_start"])
-        & (rows["event_time"] < c["window_end"]),
-        "inner",
-    )
-    out_cols = [col for col in valid.columns] + [
-        "timestamp_key",
-        "temporal_batch_size",
-        "temporal_ordering",
-    ]
-    return joined.select(*out_cols)
 
 
 def full_stream(
@@ -240,29 +148,4 @@ def session_stream(
             F.col("sw.end").alias("session_end"),
             "n_events",
         )
-    )
-
-
-def temporal_batch_stream(
-    silver: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """W4 streaming analog: per (1 s window, timestamp_key) counts.
-
-    Streaming append mode cannot re-emit individual rows with their
-    final batch size before the watermark closes the window, so the
-    streaming shape is the closed-window aggregate (timestamp_key,
-    temporal_batch_size, window) -- the batch operator
-    (operators/temporal.py) annotates rows 1:1 like the reference and
-    is cross-checked against the oracle; this streaming variant is
-    checked for agreement with it in tests/test_streaming.py.
-    """
-    valid = silver.filter(F.col("status") == "valid")
-    return (
-        valid.withWatermark("event_time", f"{cfg.watermark_seconds} seconds")
-        .groupBy(
-            F.window("event_time", f"{cfg.temporal_window_seconds} seconds"),
-            F.substring("timestamp", 1, 19).alias("timestamp_key"),
-        )
-        .agg(F.count(F.lit(1)).alias("temporal_batch_size"))
-        .withColumn("temporal_ordering", F.lit("compliant"))
     )

@@ -73,19 +73,6 @@ def kafka_route_writer(bootstrap_servers: str, topic_by_route: dict[str, str]):
     return write_route
 
 
-def run_to_memory(stream_df: DataFrame, name: str, timeout_sec: int = 120) -> None:
-    """Drive a streaming DF to completion into an in-memory table
-    (test harness; availableNow processes the full backlog then stops)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-
-
 def debug_print_sink(
     stream_df: DataFrame,
     num_rows: int = 20,

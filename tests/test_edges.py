@@ -62,7 +62,8 @@ def test_curation_stream_empty_batch_dir(spark, tmp_path):
         curation_stream,
         stream_documents,
     )
-    from big_data_streaming_dashboard_spark.streaming.sinks import run_to_memory
+
+    from .conftest import run_stream
 
     docs_dir = tmp_path / "docs"
     docs_dir.mkdir()
@@ -72,10 +73,10 @@ def test_curation_stream_empty_batch_dir(spark, tmp_path):
     import uuid
 
     name = f"t_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        curation_stream(stream_documents(spark, str(docs_dir))), name
+    got = run_stream(
+        spark, curation_stream(stream_documents(spark, str(docs_dir))), name
     )
-    assert spark.table(name).count() == 0
+    assert got.count() == 0
 
 
 def test_index_cache_sees_in_place_corpus_rewrite(spark, tmp_path):

@@ -209,113 +209,6 @@ def test_headline_queries_scale_linearly(spark, scale_dir):
     print("SCALE10X " + repr(report))
 
 
-def test_w4_hot_second_rejoin_rocksdb(spark, tmp_path):
-    """W4 two-phase rejoin under a HOT second (20k rows in one event
-    second -- the skew case the reference-faithful collect_list shape
-    buffers as one monolithic array value): with RocksDB state, phase 1
-    emits the per-second COUNT (one state row per window, never an
-    array), phase 2 re-joins per record with per-row join state. Pins:
-    no collect_list anywhere in either plan, the hot window's final
-    batch size is exact, every hot row is re-emitted, and the join's
-    state metrics show per-row entries (>= hot_n rows updated)."""
-    import time as _time
-
-    from big_data_streaming_dashboard_spark.sources.streams import (
-        stream_parquet_bronze,
-    )
-    from big_data_streaming_dashboard_spark.streaming.pipeline import (
-        silver_stream,
-        stream_temporal_counts,
-        temporal_annotated_rejoin,
-        temporal_counts_to_files,
-    )
-
-    hot_n = 20_000
-    hot_ts = "2024-06-01 12:00:00"
-    src = str(tmp_path / "bronze_hot")
-
-    def bronze_rows(ids, ts_expr):
-        return spark.range(*ids).select(
-            F.col("id").alias("event_id"),
-            ts_expr.alias("captured_time"),
-            F.format_string("%.2f", (F.col("id") % 17000) / 100.0 - 85.0).alias(
-                "latitude"
-            ),
-            F.format_string("%.2f", (F.col("id") % 35000) / 100.0 - 175.0).alias(
-                "longitude"
-            ),
-            # distinct per row -> distinct dedup keys (no dedup collapse)
-            F.format_string("%.2f", 1.0 + F.col("id").cast("double") / 4.0).alias(
-                "value"
-            ),
-            F.lit("cpm").alias("unit"),
-            F.lit(1717243200000).alias("ingestion_timestamp"),
-        )
-
-    bronze_rows((0, hot_n), F.lit(hot_ts)).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    _time.sleep(0.2)  # later mtime -> replayed second (advances watermark)
-    tail = bronze_rows(
-        (hot_n, hot_n + 60),
-        F.concat(
-            F.lit("2024-06-01 12:00:"),
-            F.lpad((10 + F.col("id") % 40).cast("string"), 2, "0"),
-        ),
-    )
-    tail.coalesce(1).write.mode("append").parquet(src)
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        counts_dir = str(tmp_path / "counts")
-        ckpt1 = str(tmp_path / "ckpt1")
-        silver1 = silver_stream(stream_parquet_bronze(spark, src), bounded_state=False)
-        q1 = temporal_counts_to_files(silver1, counts_dir, ckpt1)
-        q1.awaitTermination(180)
-        counts_static = spark.read.parquet(counts_dir)
-        assert "collect_list" not in counts_static.schema.simpleString()
-        hot = counts_static.filter(F.col("timestamp_key") == hot_ts).collect()
-        assert len(hot) == 1 and hot[0]["temporal_batch_size"] == hot_n
-
-        silver2 = silver_stream(stream_parquet_bronze(spark, src), bounded_state=False)
-        joined = temporal_annotated_rejoin(
-            silver2, stream_temporal_counts(spark, counts_dir)
-        )
-        assert "collect_list" not in joined._jdf.queryExecution().analyzed().toString()
-        name = f"hot_{abs(hash(str(tmp_path))) % 10**8}"
-        q2 = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination(180)
-        got = spark.table(name)
-        hot_rows = got.filter(F.col("timestamp_key") == hot_ts)
-        assert hot_rows.count() == hot_n  # every hot row re-emitted
-        sizes = hot_rows.select("temporal_batch_size").distinct().collect()
-        assert [r["temporal_batch_size"] for r in sizes] == [hot_n]
-        # per-row join state, not one array value per window: the state
-        # store saw at least one row-update per hot record
-        updated = sum(
-            op.get("numRowsUpdated", 0)
-            for p in q2.recentProgress
-            for op in p.get("stateOperators", [])
-        )
-        assert updated >= hot_n, updated
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
-
-
 def test_neardup_clusters_at_10x_no_driver_broadcast(spark, scale_dir):
     """Connected components at 50k docs: the iterative min-label loop
     must never let Catalyst auto-broadcast the corpus-sized label /

@@ -3,7 +3,7 @@
 Drives the SAME operators used in batch through micro-batch replay
 (file source, multiple files per trigger boundary) and checks
 agreement with the batch results: dedup across batches, windowed
-temporal counts, 3-way routed foreachBatch fan-out, stateful cooldown
+temporal annotation, 3-way routed foreachBatch fan-out, stateful cooldown
 across micro-batches."""
 
 from __future__ import annotations
@@ -19,16 +19,15 @@ from big_data_streaming_dashboard_spark.operators.route import ROUTES
 from big_data_streaming_dashboard_spark.operators.temporal import temporal_batch
 from big_data_streaming_dashboard_spark.operators.validate import validate_enrich
 from big_data_streaming_dashboard_spark.sources.streams import stream_parquet_bronze
-from big_data_streaming_dashboard_spark.streaming.pipeline import (
-    silver_stream,
-    temporal_batch_stream,
-)
+from big_data_streaming_dashboard_spark.streaming.pipeline import silver_stream
 from big_data_streaming_dashboard_spark.streaming.sinks import route_foreach_batch
 from big_data_streaming_dashboard_spark.streaming.stateful import (
     COOLDOWN_OUTPUT_SCHEMA,
     exact_cooldown_stream,
 )
 from big_data_streaming_dashboard_spark.tables import bronze_radiation
+
+from .conftest import run_stream
 
 SF = "/root/testdata/sf0.001"
 
@@ -57,18 +56,6 @@ def bronze_dir(spark, tmp_path_factory):
     return path
 
 
-def _run_stream(spark, stream_df, name):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table(name)
-
-
 def test_streaming_silver_matches_batch_dedup(spark, bronze_dir):
     """Unbounded-mode streaming dedup keeps exactly one row per key --
     the same key set as batch dedup (survivor row may differ: batch
@@ -76,52 +63,13 @@ def test_streaming_silver_matches_batch_dedup(spark, bronze_dir):
     stream = silver_stream(
         stream_parquet_bronze(spark, bronze_dir), bounded_state=False
     )
-    got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
+    got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
     batch = first_occurrence_dedup(
         validate_enrich(bronze_radiation(spark, SF)), "dedup_key", "event_id"
     )
     s_keys = sorted(r["dedup_key"] for r in got.select("dedup_key").collect())
     b_keys = sorted(r["dedup_key"] for r in batch.select("dedup_key").collect())
     assert s_keys == b_keys
-
-
-def test_streaming_temporal_counts_match_batch(spark, bronze_dir):
-    """W4 streaming window counts == batch analytic counts per second
-    (for seconds fully below the final watermark all data arrived)."""
-    silver = silver_stream(stream_parquet_bronze(spark, bronze_dir), bounded_state=False)
-    stream = temporal_batch_stream(silver)
-    got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
-    s_counts = {
-        r["timestamp_key"]: r["temporal_batch_size"]
-        for r in got.select("timestamp_key", "temporal_batch_size").collect()
-    }
-    # rows with an unparseable captured_time are 'valid' (the validator
-    # never checks it -- reference-faithful) but have no event time, so
-    # streaming can never window them; compare on the parseable subset
-    batch = temporal_batch(
-        first_occurrence_dedup(
-            validate_enrich(bronze_radiation(spark, SF)), "dedup_key", "event_id"
-        ).filter((F.col("status") == "valid") & F.col("event_time").isNotNull())
-    )
-    b_counts = {
-        r["timestamp_key"]: r["temporal_batch_size"]
-        for r in batch.select("timestamp_key", "temporal_batch_size")
-        .distinct()
-        .collect()
-    }
-    # availableNow closes all windows at end-of-stream; every batch-side
-    # second must appear with the same count
-    for key, n in s_counts.items():
-        assert b_counts[key] == n, key
-    # seconds inside the final watermark horizon (last 5 s of event
-    # time) are held in state and never emit -- everything else must
-    import datetime
-
-    missing = set(b_counts) - set(s_counts)
-    fmt = "%Y-%m-%d %H:%M:%S"
-    horizon = datetime.datetime.strptime(max(b_counts), fmt) - datetime.timedelta(seconds=6)
-    late = [k for k in missing if datetime.datetime.strptime(k, fmt) < horizon]
-    assert not late, f"unemitted windows outside the final horizon: {sorted(late)[:5]}"
 
 
 def test_streaming_temporal_annotated_rows_match_batch(spark, bronze_dir):
@@ -132,7 +80,7 @@ def test_streaming_temporal_annotated_rows_match_batch(spark, bronze_dir):
     )
 
     silver = silver_stream(stream_parquet_bronze(spark, bronze_dir), bounded_state=False)
-    got = _run_stream(
+    got = run_stream(
         spark, temporal_batch_stream_annotated(silver), f"t_{uuid.uuid4().hex[:8]}"
     )
     s_rows = {
@@ -151,6 +99,17 @@ def test_streaming_temporal_annotated_rows_match_batch(spark, bronze_dir):
     assert len(s_rows) > 0.9 * len(b_rows)  # tail windows held by watermark
     for eid, vals in s_rows.items():
         assert b_rows[eid] == vals, eid
+    # availableNow closes every window the watermark passed: only
+    # seconds inside the final horizon (the last 5 s of event time
+    # plus the window) may be missing -- everything else must emit
+    import datetime
+
+    missing = {v[0] for v in b_rows.values()} - {v[0] for v in s_rows.values()}
+    fmt = "%Y-%m-%d %H:%M:%S"
+    newest = max(v[0] for v in b_rows.values())
+    horizon = datetime.datetime.strptime(newest, fmt) - datetime.timedelta(seconds=6)
+    late = [k for k in missing if datetime.datetime.strptime(k, fmt) < horizon]
+    assert not late, f"unemitted windows outside the final horizon: {sorted(late)[:5]}"
 
 
 def test_foreach_batch_three_way_routing(spark, bronze_dir):
@@ -191,7 +150,7 @@ def test_full_stream_single_job_matches_batch_pipeline(spark, bronze_dir):
     from big_data_streaming_dashboard_spark.operators.pipeline import batch_pipeline
     from big_data_streaming_dashboard_spark.streaming.pipeline import full_stream
 
-    got = _run_stream(
+    got = run_stream(
         spark,
         full_stream(stream_parquet_bronze(spark, bronze_dir)),
         f"t_{uuid.uuid4().hex[:8]}",
@@ -360,7 +319,7 @@ def test_stream_static_policy_enrichment(spark, bronze_dir):
 
     silver = silver_stream(stream_parquet_bronze(spark, bronze_dir), bounded_state=False)
     enriched = enrich_with_policy(silver, level_policy(spark))
-    got = _run_stream(spark, enriched, f"t_{uuid.uuid4().hex[:8]}")
+    got = run_stream(spark, enriched, f"t_{uuid.uuid4().hex[:8]}")
     rows = got.collect()
     assert len(rows) > 0
     policy = {level: (action, prio) for level, action, prio in LEVEL_POLICY_ROWS}
@@ -384,7 +343,7 @@ def test_stream_stream_interval_join_matches_batch(spark, bronze_dir):
     joined = critical_context_stream(
         validate_enrich(bronze_a), validate_enrich(bronze_b)
     )
-    got = _run_stream(spark, joined, f"t_{uuid.uuid4().hex[:8]}")
+    got = run_stream(spark, joined, f"t_{uuid.uuid4().hex[:8]}")
     s_pairs = {
         (r["critical_id"], r["reading_id"]): (r["cell"], r["reading_value"])
         for r in got.collect()
@@ -413,7 +372,7 @@ def test_session_window_stream_matches_batch(spark, bronze_dir):
     from big_data_streaming_dashboard_spark.streaming.pipeline import session_stream
 
     silver = silver_stream(stream_parquet_bronze(spark, bronze_dir), bounded_state=False)
-    got = _run_stream(spark, session_stream(silver), f"t_{uuid.uuid4().hex[:8]}")
+    got = run_stream(spark, session_stream(silver), f"t_{uuid.uuid4().hex[:8]}")
     s_sessions = {
         (r["level"], r["session_start"]): (r["session_end"], r["n_events"])
         for r in got.collect()
@@ -469,69 +428,11 @@ def test_exact_cooldown_state_survives_micro_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    got = _run_stream(spark, exact_cooldown_stream(stream), f"t_{uuid.uuid4().hex[:8]}")
+    got = run_stream(spark, exact_cooldown_stream(stream), f"t_{uuid.uuid4().hex[:8]}")
     ids = sorted(r["event_id"] for r in got.collect())
     # 0 emitted; 20s suppressed; 25s suppressed (state crossed the batch
     # boundary); 40s emitted (>= 30s after t=0)
     assert ids == [0, 3]
-
-
-def test_streaming_temporal_annotated_rejoin_matches_batch(
-    spark, bronze_dir, tmp_path
-):
-    """Scale-safe W4 (no collect_list): phase 1 writes the per-second
-    count aggregate to files; phase 2 stream-stream joins the record
-    stream with the count stream. Every emitted row carries the same
-    final batch size as the batch annotation."""
-    from big_data_streaming_dashboard_spark.streaming.pipeline import (
-        stream_temporal_counts,
-        temporal_annotated_rejoin,
-        temporal_counts_to_files,
-    )
-
-    counts_dir = str(tmp_path / "counts")
-    ckpt = str(tmp_path / "ckpt")
-    silver1 = silver_stream(
-        stream_parquet_bronze(spark, bronze_dir), bounded_state=False
-    )
-    q = temporal_counts_to_files(silver1, counts_dir, ckpt)
-    q.awaitTermination(120)
-
-    silver2 = silver_stream(
-        stream_parquet_bronze(spark, bronze_dir), bounded_state=False
-    )
-    joined = temporal_annotated_rejoin(
-        silver2, stream_temporal_counts(spark, counts_dir)
-    )
-    got = _run_stream(spark, joined, f"t_{uuid.uuid4().hex[:8]}")
-    s_rows = {
-        r["event_id"]: (
-            r["timestamp_key"],
-            r["temporal_batch_size"],
-            r["temporal_ordering"],
-        )
-        for r in got.collect()
-    }
-    batch = temporal_batch(
-        first_occurrence_dedup(
-            validate_enrich(bronze_radiation(spark, SF)), "dedup_key", "event_id"
-        ).filter((F.col("status") == "valid") & F.col("event_time").isNotNull())
-    )
-    b_rows = {
-        r["event_id"]: (
-            r["timestamp_key"],
-            r["temporal_batch_size"],
-            r["temporal_ordering"],
-        )
-        for r in batch.collect()
-    }
-    # every emitted row must agree exactly with the batch annotation
-    for event_id, vals in s_rows.items():
-        assert b_rows[event_id] == vals, event_id
-    # phase 1 closed all windows (availableNow drains the backlog), so
-    # phase 2 re-finds nearly all batch rows; only rows whose window
-    # never closed under the phase-1 watermark tail are absent
-    assert len(s_rows) > 0.9 * len(b_rows)
 
 
 def test_debug_print_sink_runs(spark, bronze_dir):
@@ -613,7 +514,7 @@ def test_streaming_curation_matches_batch(spark, tmp_path):
     docs_dir = str(tmp_path / "docs")
     docs.repartition(4).write.parquet(docs_dir)
 
-    got = _run_stream(
+    got = run_stream(
         spark,
         curation_stream(stream_documents(spark, docs_dir)),
         f"t_{uuid.uuid4().hex[:8]}",
@@ -677,7 +578,7 @@ def test_streaming_neardup_probe_matches_batch(spark, tmp_path):
     stream = neardup_probe_stream(
         stream_documents(spark, docs_dir), spark.read.parquet(idx_path)
     )
-    got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
+    got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
     s_pairs = {
         frozenset((r["doc_id"], r["index_doc_id"])): r["jaccard"]
         for r in got.collect()
@@ -778,7 +679,7 @@ def test_streaming_containment_probe_matches_batch(spark, tmp_path):
         spark.read.parquet(f"{idx_path}/postings"),
         spark.read.parquet(f"{idx_path}/docs"),
     )
-    got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
+    got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
     s_rows = {
         (r["contained_doc"], r["container_doc"]): r["containment"]
         for r in got.collect()
@@ -817,41 +718,6 @@ def test_containment_probe_rejects_pre_r7_string_index(spark, tmp_path):
             old,
             spark.createDataFrame([], "doc_id long, shi array<long>, n_sh int"),
         )
-
-
-def test_temporal_counts_checkpoint_restart_idempotent(spark, bronze_dir, tmp_path):
-    """Re-running the phase-1 count writer against the same checkpoint
-    processes nothing new: the counts directory is byte-stable, so the
-    phase-2 rejoin never sees duplicated per-second counts."""
-    from big_data_streaming_dashboard_spark.streaming.pipeline import (
-        temporal_counts_to_files,
-    )
-
-    counts_dir = str(tmp_path / "counts")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        silver = silver_stream(
-            stream_parquet_bronze(spark, bronze_dir), bounded_state=False
-        )
-        q = temporal_counts_to_files(silver, counts_dir, ckpt)
-        q.awaitTermination(120)
-
-    run()
-    first = sorted(
-        (r["timestamp_key"], r["temporal_batch_size"])
-        for r in spark.read.parquet(counts_dir).collect()
-    )
-    assert first
-    run()  # restart from the same checkpoint: backlog already consumed
-    second = sorted(
-        (r["timestamp_key"], r["temporal_batch_size"])
-        for r in spark.read.parquet(counts_dir).collect()
-    )
-    assert second == first
-    # keys are unique: no window ever emitted twice
-    keys = [k for k, _ in second]
-    assert len(keys) == len(set(keys))
 
 
 def test_routed_sink_wire_contract(spark):
@@ -999,7 +865,7 @@ def test_streaming_contamination_probe_matches_batch(spark, tmp_path):
     docs_dir = str(tmp_path / "train_docs")
     train.repartition(4).write.parquet(docs_dir)
 
-    got = _run_stream(
+    got = run_stream(
         spark,
         contamination_probe_stream(
             stream_documents(spark, docs_dir),
@@ -1081,7 +947,7 @@ def test_streaming_contamination_bloom_gate(spark, tmp_path):
     docs_dir = str(tmp_path / "train_docs_b")
     train.repartition(4).write.parquet(docs_dir)
 
-    got = _run_stream(
+    got = run_stream(
         spark,
         contamination_probe_stream(
             stream_documents(spark, docs_dir),
@@ -1135,7 +1001,7 @@ def test_streaming_pii_redact_matches_batch(spark, tmp_path):
 
     stream = pii_redact(stream_documents(spark, ddir))
     assert "stateful" not in stream._jdf.queryExecution().analyzed().toString().lower()
-    got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
+    got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
     s = {r["doc_id"]: tuple(r) for r in got.collect()}
     b = {r["doc_id"]: tuple(r) for r in pii_redact(docs).collect()}
     assert s == b
@@ -1154,8 +1020,6 @@ def test_text_ops_streaming_batch_parity(spark, tmp_path):
         normalize_decorate,
         normalize_text,
     )
-    from big_data_streaming_dashboard_spark.streaming.sinks import run_to_memory
-
     docs_batch = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").limit(
         120
     )
@@ -1170,10 +1034,7 @@ def test_text_ops_streaming_batch_parity(spark, tmp_path):
         ("norm", lambda d: normalize_text(normalize_decorate(d))),
     ):
         name = f"{opname}_{uuid.uuid4().hex[:8]}"
-        run_to_memory(op(stream), name)
-        got = {
-            tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect()
-        }
+        got = {tuple(r) for r in run_stream(spark, op(stream), name).collect()}
         expect = {tuple(r) for r in op(spark.read.parquet(src)).collect()}
         assert got == expect, opname
 
@@ -1209,7 +1070,7 @@ def test_streaming_importance_probe_matches_batch(spark, tmp_path):
         spark.read.parquet(f"{idx_path}/rates"),
         spark.read.parquet(f"{idx_path}/totals"),
     )
-    got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
+    got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
     s_rows = {r["doc_id"]: r for r in got.collect()}
     b_rows = {r["doc_id"]: r for r in importance_weights(docs).collect()}
     assert set(s_rows) == set(b_rows)
@@ -1248,7 +1109,7 @@ def test_streaming_bpe_encode_matches_batch(spark, tmp_path):
     stream = bpe_encode_stream(
         stream_documents(spark, docs_dir), spark.read.parquet(merges_path)
     )
-    got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
+    got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
     s_rows = {r["doc_id"]: tuple(r)[1:] for r in got.collect()}
     b_rows = {r["doc_id"]: tuple(r)[1:] for r in bpe_encode_stats(docs).collect()}
     assert s_rows == b_rows
@@ -1286,7 +1147,7 @@ def test_streaming_semantic_probe_matches_batch(spark, tmp_path):
         spark.read.parquet(idx + "/vecs"),
         threshold=0.3,
     )
-    got = _run_stream(spark, hits, f"t_{uuid.uuid4().hex[:8]}")
+    got = run_stream(spark, hits, f"t_{uuid.uuid4().hex[:8]}")
     s_rows = {
         (r["vec_id"], r["index_vec_id"]): r["cos_sim"] for r in got.collect()
     }
@@ -1755,7 +1616,7 @@ def test_neardup_probe_merged_bucket_cap_across_appends(spark, tmp_path):
             spark.read.parquet(idx),
             max_bucket_size=5,
         )
-        got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
+        got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
         return sorted(r["index_doc_id"] for r in got.collect())
 
     assert hits(merged_idx) == hits(oneshot_idx) == []
@@ -1766,7 +1627,7 @@ def test_neardup_probe_merged_bucket_cap_across_appends(spark, tmp_path):
         spark.read.parquet(merged_idx),
         max_bucket_size=1000,
     )
-    got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
+    got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
     assert sorted(r["index_doc_id"] for r in got.collect()) == list(range(8))
 
 
@@ -1957,7 +1818,7 @@ def test_containment_probe_merged_df_cap_across_appends(spark, tmp_path):
             df_index=spark.read.parquet(idx + "/df"),
             max_postings=cap,
         )
-        got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
+        got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
         return sorted(
             (r["contained_doc"], r["container_doc"]) for r in got.collect()
         )
@@ -2780,7 +2641,7 @@ def test_probe_dedup_ttl_matches_unbounded_state(spark, tmp_path):
             spark.read.parquet(nd_idx),
             dedup_ttl=ttl,
         )
-        got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
+        got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
         nd_outs.append(
             sorted(
                 (r["doc_id"], r["index_doc_id"], r["jaccard"])
@@ -2821,7 +2682,7 @@ def test_probe_dedup_ttl_matches_unbounded_state(spark, tmp_path):
             threshold=0.2,
             dedup_ttl=ttl,
         )
-        got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
+        got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
         sem_outs.append(sorted(map(tuple, got.collect())))
     assert sem_outs[0] == sem_outs[1] and sem_outs[0]
 
@@ -2837,7 +2698,7 @@ def test_probe_dedup_ttl_matches_unbounded_state(spark, tmp_path):
             threshold=0.5,
             dedup_ttl=ttl,
         )
-        got = _run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
+        got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
         c_outs.append(sorted(map(tuple, got.collect())))
     assert c_outs[0] == c_outs[1] and c_outs[0]
 
@@ -3597,7 +3458,7 @@ def test_streaming_funnel_matches_batch_under_reverse_replay(spark, tmp_path):
         .parquet(src)
     )
     name = f"funnel_{uuid.uuid4().hex[:8]}"
-    emitted = _run_stream(spark, funnel_state_stream(stream), name)
+    emitted = run_stream(spark, funnel_state_stream(stream), name)
     # the reverse replay must actually have produced multi-batch
     # per-user state updates, or the test is vacuous
     assert emitted.agg(F.max("seq")).collect()[0][0] >= 3
@@ -3662,7 +3523,7 @@ def test_streaming_funnel_retroactive_view_reopens_pruned_click(spark, tmp_path)
         .parquet(src)
     )
     name = f"funnel_retro_{uuid.uuid4().hex[:8]}"
-    emitted = _run_stream(spark, funnel_state_stream(stream), name)
+    emitted = run_stream(spark, funnel_state_stream(stream), name)
     assert emitted.agg(F.max("seq")).collect()[0][0] == 2
     row = funnel_latest(emitted).collect()[0]
     assert row["first_view"].second == 5
@@ -3706,7 +3567,7 @@ def test_streaming_retention_matches_batch_under_reverse_replay(spark, tmp_path)
         .parquet(src)
     )
     name = f"ret_{uuid.uuid4().hex[:8]}"
-    emitted = _run_stream(spark, retention_state_stream(stream), name)
+    emitted = run_stream(spark, retention_state_stream(stream), name)
     assert emitted.agg(F.max("seq")).collect()[0][0] >= 3
     got = sorted(
         tuple(r)
@@ -3769,7 +3630,7 @@ def test_streaming_anomaly_verdicts_match_batch(spark, tmp_path):
     )
     name = f"anom_{uuid.uuid4().hex[:8]}"
     got_df = anomaly_table(
-        _run_stream(spark, anomaly_verdict_stream(stream), name)
+        run_stream(spark, anomaly_verdict_stream(stream), name)
     )
     got = sorted(tuple(r) for r in got_df.collect())
     want = sorted(tuple(r) for r in value_anomalies(spark, sf).collect())
@@ -5917,7 +5778,7 @@ def test_rag_endpoints_serve_from_ivfpq_index(spark, tmp_path):
 )
 def test_compact_then_probe_parity_all_kinds(spark, tmp_path, kind):
     """r15 verdict item 4: compact-then-probe == probe, pinned for
-    EVERY registered compaction layout (`_INDEX_COMPACT_LAYOUT`), not
+    EVERY registered compaction layout (`_INDEX_LAYOUT`), not
     just the PQ + BM25 members the r15 test covered. Each case builds
     a root, appends a delta (a second file generation), probes, LSM-
     compacts, and re-probes through freshly-read frames -- the two
@@ -7088,7 +6949,7 @@ def test_rag_dense_retriever_serves_plain_kinds(spark, tmp_path, kind):
     holding a plain root no longer has to rebuild it as a composed
     index to serve the RAG endpoints' dense constituent. Each kind
     rides the SAME extracted per-batch plan its own probe sink serves
-    (`_pq_ranked_plan` etc.), and at full budget (shortlist = corpus
+    (`_ivfpq_ranked_plan` etc. with no centroids), and at full budget (shortlist = corpus
     for the shortlist kinds, n_probe = n_lists for plain ivf) the
     ranking collapses to exact brute-force: the knn vote equals the
     brute-dense form row-for-row."""
