@@ -3,8 +3,8 @@
 Drives the SAME operators used in batch through micro-batch replay
 (file source, multiple files per trigger boundary) and checks
 agreement with the batch results: dedup across batches, windowed
-temporal annotation, 3-way routed foreachBatch fan-out, stateful cooldown
-across micro-batches."""
+temporal counts and annotation, 3-way routed foreachBatch fan-out,
+stateful cooldown across micro-batches."""
 
 from __future__ import annotations
 
@@ -99,15 +99,55 @@ def test_streaming_temporal_annotated_rows_match_batch(spark, bronze_dir):
     assert len(s_rows) > 0.9 * len(b_rows)  # tail windows held by watermark
     for eid, vals in s_rows.items():
         assert b_rows[eid] == vals, eid
-    # availableNow closes every window the watermark passed: only
-    # seconds inside the final horizon (the last 5 s of event time
-    # plus the window) may be missing -- everything else must emit
+
+
+def test_streaming_temporal_counts_match_batch(spark, bronze_dir):
+    """W4 streaming window counts == batch analytic counts per second
+    (for seconds fully below the final watermark all data arrived)."""
+    from big_data_streaming_dashboard_spark.streaming.pipeline import (
+        temporal_batch_stream_annotated,
+    )
+
+    silver = silver_stream(stream_parquet_bronze(spark, bronze_dir), bounded_state=False)
+    got = run_stream(
+        spark, temporal_batch_stream_annotated(silver), f"t_{uuid.uuid4().hex[:8]}"
+    )
+    s_counts = {
+        r["timestamp_key"]: r["temporal_batch_size"]
+        for r in got.select("timestamp_key", "temporal_batch_size").distinct().collect()
+    }
+    # a closed window re-emits every one of its records, so the number
+    # of emitted rows per second is the window's count
+    s_rows = {
+        r["timestamp_key"]: r["n"]
+        for r in got.groupBy("timestamp_key").agg(F.count("*").alias("n")).collect()
+    }
+    assert s_rows == s_counts
+    # rows with an unparseable captured_time are 'valid' (the validator
+    # never checks it -- reference-faithful) but have no event time, so
+    # streaming can never window them; compare on the parseable subset
+    batch = temporal_batch(
+        first_occurrence_dedup(
+            validate_enrich(bronze_radiation(spark, SF)), "dedup_key", "event_id"
+        ).filter((F.col("status") == "valid") & F.col("event_time").isNotNull())
+    )
+    b_counts = {
+        r["timestamp_key"]: r["temporal_batch_size"]
+        for r in batch.select("timestamp_key", "temporal_batch_size")
+        .distinct()
+        .collect()
+    }
+    # availableNow closes all windows at end-of-stream; every batch-side
+    # second must appear with the same count
+    for key, n in s_counts.items():
+        assert b_counts[key] == n, key
+    # seconds inside the final watermark horizon (last 5 s of event
+    # time) are held in state and never emit -- everything else must
     import datetime
 
-    missing = {v[0] for v in b_rows.values()} - {v[0] for v in s_rows.values()}
+    missing = set(b_counts) - set(s_counts)
     fmt = "%Y-%m-%d %H:%M:%S"
-    newest = max(v[0] for v in b_rows.values())
-    horizon = datetime.datetime.strptime(newest, fmt) - datetime.timedelta(seconds=6)
+    horizon = datetime.datetime.strptime(max(b_counts), fmt) - datetime.timedelta(seconds=6)
     late = [k for k in missing if datetime.datetime.strptime(k, fmt) < horizon]
     assert not late, f"unemitted windows outside the final horizon: {sorted(late)[:5]}"
 
