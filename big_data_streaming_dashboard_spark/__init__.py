@@ -12,7 +12,8 @@ analysis, multimodal plumbing) the reference lacks.
 Layout (SURVEY.md section 7.1):
 - ``session``    - SparkSession factory tuned for local[N] and cluster use
 - ``tables``     - fixture loaders for /root/testdata parquet tables
-- ``config``     - pipeline thresholds (mirrors flink_process/config.ini)
+- ``config``     - the reference's pipeline constants as one frozen
+                   ``CONFIG`` (fixed, not settable)
 - ``functions/`` - scalar expression builders (levels, keys, time parse)
 - ``operators/`` - silver/gold operators (validate, dedup, route, window,
                    analytics, alerts)

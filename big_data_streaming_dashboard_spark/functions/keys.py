@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import CONFIG
 
 INVALID_KEY = "invalid_key"
 
@@ -30,7 +30,6 @@ def dedup_key(
     value: Column,
     captured_time: Column,
     unit: Column,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
 ) -> Column:
     """Composite key; INVALID_KEY when any numeric field fails to parse."""
     parsed_ok = (
@@ -40,9 +39,9 @@ def dedup_key(
     )
     key = F.concat_ws(
         "|",
-        _num(lat, cfg.coord_decimals),
-        _num(lon, cfg.coord_decimals),
-        _num(value, cfg.value_decimals),
+        _num(lat, CONFIG.coord_decimals),
+        _num(lon, CONFIG.coord_decimals),
+        _num(value, CONFIG.value_decimals),
         F.coalesce(captured_time, F.lit("")),
         F.coalesce(unit, F.lit("")),
     )

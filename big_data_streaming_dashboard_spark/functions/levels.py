@@ -9,36 +9,36 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import CONFIG
 
 
-def level3(value: Column, cfg: PipelineConfig = DEFAULT_CONFIG) -> Column:
+def level3(value: Column) -> Column:
     """Server-side 3-bucket level (flink_process/flink_process.py:140-145)."""
     return (
-        F.when(value < cfg.low_threshold, "low")
-        .when(value < cfg.moderate_threshold, "moderate")
+        F.when(value < CONFIG.low_threshold, "low")
+        .when(value < CONFIG.moderate_threshold, "moderate")
         .otherwise("high")
     )
 
 
-def level5(value: Column, cfg: PipelineConfig = DEFAULT_CONFIG) -> Column:
+def level5(value: Column) -> Column:
     """Client-side 5-bucket level (front_end/src/utils/mapStyles.js:25-32).
 
     Deliberately disagrees with level3 (5 buckets; null -> very-low), as
     the reference's two classifiers do -- we expose both.
     """
     return (
-        F.when(value >= cfg.level5_high, "very-high")
-        .when(value >= cfg.level5_moderate, "high")
-        .when(value >= cfg.level5_low, "moderate")
-        .when(value >= cfg.level5_very_low, "low")
+        F.when(value >= CONFIG.level5_high, "very-high")
+        .when(value >= CONFIG.level5_moderate, "high")
+        .when(value >= CONFIG.level5_low, "moderate")
+        .when(value >= CONFIG.level5_very_low, "low")
         .otherwise("very-low")
     )
 
 
-def critical_flag(value: Column, cfg: PipelineConfig = DEFAULT_CONFIG) -> Column:
+def critical_flag(value: Column) -> Column:
     """value >= danger threshold (flink_process/flink_process.py:148)."""
-    return value >= F.lit(cfg.danger_threshold)
+    return value >= F.lit(CONFIG.danger_threshold)
 
 
 def severity_ws(value: Column) -> Column:
@@ -50,6 +50,6 @@ def severity_ws(value: Column) -> Column:
     )
 
 
-def severity_map(value: Column, threshold: float) -> Column:
+def severity_map(value: Column) -> Column:
     """Alert severity, MapView variant (MapView.jsx:94): >= 2*threshold."""
-    return F.when(value >= 2.0 * threshold, "critical").otherwise("warning")
+    return F.when(value >= 2.0 * CONFIG.alert_threshold, "critical").otherwise("warning")

@@ -1,6 +1,6 @@
 from .validate import validate_enrich
 from .dedup import first_occurrence_dedup
-from .route import route, split_routes
+from .route import route
 from .temporal import temporal_batch, union_with_invalid
 from .analytics import (
     geojson_features,
@@ -28,7 +28,6 @@ __all__ = [
     "route",
     "salted_aggregate",
     "salted_broadcast_left",
-    "split_routes",
     "temporal_batch",
     "union_with_invalid",
     "validate_enrich",

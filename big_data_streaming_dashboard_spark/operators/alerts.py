@@ -25,18 +25,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import CONFIG
 from ..functions.levels import severity_map, severity_ws
 
 
-def alerts_ws(points: DataFrame, threshold: float | None = None,
-              cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+def alerts_ws(points: DataFrame) -> DataFrame:
     """The useWebsocket alert variant (the reference's SECOND, coexisting
     alert path): same threshold filter, severity by the 100/50 rule
     (P10), message 'High radiation detected: {v} CPM'
     (useWebsocket.js:59-69)."""
-    thr = threshold if threshold is not None else cfg.alert_threshold
-    return points.filter(F.col("value") >= F.lit(thr)).select(
+    return points.filter(F.col("value") >= F.lit(CONFIG.alert_threshold)).select(
         "event_id",
         "timestamp",
         F.col("value"),
@@ -49,19 +47,14 @@ def alerts_ws(points: DataFrame, threshold: float | None = None,
     )
 
 
-def alert_candidates(
-    points: DataFrame,
-    threshold: float | None = None,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
+def alert_candidates(points: DataFrame) -> DataFrame:
     """F8 threshold filter + P10 severity + P12 message + D2 cooldown key.
 
     Input: valid silver points (lat/lon/value/timestamp/event_time).
     Output adds: severity, cooldown_key, alert_message.
     """
-    thr = threshold if threshold is not None else cfg.alert_threshold
-    d = cfg.alert_location_decimals
-    sev = severity_map(F.col("value"), thr)
+    d = CONFIG.alert_location_decimals
+    sev = severity_map(F.col("value"))
     # useAlertManager.js:19 -- `${severity}-${lat.toFixed(3)},${lon.toFixed(3)}`
     key = F.concat_ws(
         "-",
@@ -80,22 +73,17 @@ def alert_candidates(
         F.format_string("%.2f", F.col("lon")),
     )
     return (
-        points.filter(F.col("value") >= F.lit(thr))
+        points.filter(F.col("value") >= F.lit(CONFIG.alert_threshold))
         .withColumn("severity", sev)
         .withColumn("cooldown_key", key)
         .withColumn("alert_message", msg)
     )
 
 
-def active_alerts(
-    candidates: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    max_alerts: int = 5,
-) -> DataFrame:
+def active_alerts(candidates: DataFrame) -> DataFrame:
     """W11 auto-expiring alert view: alerts still visible at the end of
     the stream -- severity-dependent TTL (critical 15 s / warning 10 s /
-    else 7 s, useAlertManager.js:50-65), at most ``max_alerts`` newest
-    retained. 'Now' is the max event time over candidates, making the
+    else 7 s, useAlertManager.js:50-65), at most the 5 newest retained. 'Now' is the max event time over candidates, making the
     batch view deterministic."""
     ttl = (
         F.when(F.col("severity") == "critical", 15)
@@ -110,22 +98,18 @@ def active_alerts(
         )
         .drop("_now")
         .orderBy(F.col("event_time").desc(), F.col("event_id").desc())
-        .limit(max_alerts)
+        .limit(5)
     )
 
 
-def alert_cooldown(
-    candidates: DataFrame,
-    order_col: str = "event_id",
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """D2 cooldown dedup, batch analog: earliest alert per
+def alert_cooldown(candidates: DataFrame) -> DataFrame:
+    """D2 cooldown dedup, batch analog: the lowest-event_id alert per
     (cooldown_key, 30 s event-time bucket). One shuffle, min_by agg."""
     bucket = (
-        F.floor(F.unix_timestamp("event_time") / cfg.alert_cooldown_seconds)
+        F.floor(F.unix_timestamp("event_time") / CONFIG.alert_cooldown_seconds)
     ).alias("cooldown_bucket")
     others = [c for c in candidates.columns if c != "cooldown_key"]
     agg = candidates.groupBy(F.col("cooldown_key"), bucket).agg(
-        F.min_by(F.struct(*others), F.col(order_col)).alias("_first")
+        F.min_by(F.struct(*others), F.col("event_id")).alias("_first")
     )
     return agg.select("cooldown_key", "cooldown_bucket", "_first.*")

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import CONFIG
 
 # UI bucket -> level5 values (front_end/src/components/MapView.jsx:51-68)
 LEVEL_BUCKETS = {
@@ -33,12 +33,12 @@ LEVEL_BUCKETS = {
 }
 
 
-def rolling_stats(points: DataFrame, order_col: str = "event_id") -> DataFrame:
+def rolling_stats(points: DataFrame) -> DataFrame:
     """A1 multi-metric stats over the current point set, one pass.
 
     Mirrors useDatastats.js:18-55: level-bucket counts on the 5-bucket
     client classification, sum/count/avg of numeric values, total and
-    dangerous point counts, last timestamp by arrival order.
+    dangerous point counts, last timestamp by arrival order (event_id).
     """
     is_high = F.col("level5").isin(*LEVEL_BUCKETS["high"])
     is_med = F.col("level5").isin(*LEVEL_BUCKETS["medium"])
@@ -55,13 +55,11 @@ def rolling_stats(points: DataFrame, order_col: str = "event_id") -> DataFrame:
         ).alias("avg_value"),
         F.count(F.lit(1)).alias("total_points"),
         F.count(F.when(is_high, 1)).alias("dangerous_points"),
-        F.max_by("timestamp", F.col(order_col)).alias("last_update"),
+        F.max_by("timestamp", F.col("event_id")).alias("last_update"),
     )
 
 
-def grid_cluster(
-    points: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG, cell_deg: float | None = None
-) -> DataFrame:
+def grid_cluster(points: DataFrame) -> DataFrame:
     """A2 spatial cluster aggregation on a lat/lon grid.
 
     Per-cluster max value + point count, plus the reference's step
@@ -69,7 +67,7 @@ def grid_cluster(
     radius bucket by point_count steps [100, 750]
     (MapView.jsx:192-208, mapStyles.js).
     """
-    cell = F.lit(cell_deg if cell_deg is not None else cfg.cluster_cell_deg)
+    cell = F.lit(CONFIG.cluster_cell_deg)
     cell_lat = F.floor(F.col("lat") / cell).alias("cell_lat")
     cell_lon = F.floor(F.col("lon") / cell).alias("cell_lon")
     agg = points.groupBy(cell_lat, cell_lon).agg(
@@ -97,21 +95,14 @@ def grid_cluster(
     )
 
 
-def recent_points(
-    points: DataFrame,
-    n: int | None = None,
-    ts_col: str = "timestamp",
-    tiebreak_col: str = "event_id",
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
+def recent_points(points: DataFrame, n: int = CONFIG.retention_points) -> DataFrame:
     """W8 retention window: last N points by recency (deterministic).
 
-    Ties on the timestamp are broken by ``tiebreak_col`` so the result
-    set is stable across engines/partitionings. Compiles to
+    Ties on the timestamp are broken by ``event_id`` so the result set
+    is stable across engines/partitionings. Compiles to
     TakeOrderedAndProject (per-partition heaps, no global sort).
     """
-    n = n or cfg.retention_points
-    return points.orderBy(F.col(ts_col).desc(), F.col(tiebreak_col).desc()).limit(n)
+    return points.orderBy(F.col("timestamp").desc(), F.col("event_id").desc()).limit(n)
 
 
 def geojson_features(points: DataFrame) -> DataFrame:

@@ -6,14 +6,14 @@ only the first record per key via per-key ValueState
 key ``invalid_key`` so only the first-ever unparseable record survives
 -- a quirk we reproduce (functions/keys.py).
 
-Batch semantics: "first" = lowest ``order_col`` (the reference's "first
-seen" is arrival order; our deterministic analog is event_id /
-ingestion time). Implemented as a single hash aggregation
-(``min_by``-style) rather than window+filter: one shuffle on the key,
-map-side partial aggregation, no per-partition sort -- the cheapest
-shape at 100 TB. Streaming variant: streaming/pipeline.py uses
-``dropDuplicates`` on the key (unbounded state, like the reference) or
-``dropDuplicatesWithinWatermark`` (bounded state, the scale-safe mode).
+Batch semantics: "first" = lowest ``event_id`` (the reference's "first
+seen" is arrival order; our deterministic analog is the event id).
+Implemented as a single hash aggregation (``min_by``-style) rather than
+window+filter: one shuffle on the key, map-side partial aggregation, no
+per-partition sort -- the cheapest shape at 100 TB. Streaming variant:
+streaming/pipeline.py uses ``dropDuplicates`` on the key (unbounded
+state, like the reference) or ``dropDuplicatesWithinWatermark``
+(bounded state, the scale-safe mode).
 """
 
 from __future__ import annotations
@@ -22,16 +22,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def first_occurrence_dedup(
-    df: DataFrame,
-    key_cols: list[str] | str = "dedup_key",
-    order_col: str = "event_id",
-) -> DataFrame:
-    """Keep the first row (lowest order_col) per key. Deterministic."""
-    if isinstance(key_cols, str):
-        key_cols = [key_cols]
-    others = [c for c in df.columns if c not in key_cols]
-    agg = df.groupBy(*key_cols).agg(
-        F.min_by(F.struct(*others), F.col(order_col)).alias("_first")
+def first_occurrence_dedup(df: DataFrame) -> DataFrame:
+    """Keep the first row (lowest event_id) per dedup_key. Deterministic."""
+    others = [c for c in df.columns if c != "dedup_key"]
+    agg = df.groupBy("dedup_key").agg(
+        F.min_by(F.struct(*others), F.col("event_id")).alias("_first")
     )
-    return agg.select(*key_cols, "_first.*")
+    return agg.select("dedup_key", "_first.*")

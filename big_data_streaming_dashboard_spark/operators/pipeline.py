@@ -1,8 +1,8 @@
 """End-to-end batch pipeline builder (the reference's full dataflow,
 flink_process/flink_process.py:245-351, as one composition).
 
-bronze -> validate_enrich -> dedup (D1) -> [temporal batch W4 if
-enabled (W6), invalid bypass W5] -> route (F3/F4).
+bronze -> validate_enrich -> dedup (D1) -> [temporal batch W4 (W6
+ordering always on), invalid bypass W5] -> route (F3/F4).
 
 The same composition runs under Structured Streaming via
 streaming/pipeline.py; this batch form is what the oracle checks.
@@ -13,17 +13,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
 from .dedup import first_occurrence_dedup
 from .route import route
 from .temporal import temporal_batch, union_with_invalid
 from .validate import validate_enrich
 
 
-def batch_pipeline(
-    bronze: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """Full bronze -> routed-gold pipeline; W6 flag picks the plan.
+def batch_pipeline(bronze: DataFrame) -> DataFrame:
+    """Full bronze -> routed-gold pipeline.
 
     The deduped stage feeds THREE consumers (temporal count agg, its
     join-back, and the invalid bypass); Catalyst does not reuse the
@@ -36,12 +33,8 @@ def batch_pipeline(
     pipeline writes the silver/deduped table to storage; local
     checkpoint is the single-process analog (executor-loss caveat
     does not apply to local mode)."""
-    silver = validate_enrich(bronze, cfg)
-    deduped = first_occurrence_dedup(silver, "dedup_key", "event_id")
-    if cfg.enable_temporal_ordering:
-        deduped = deduped.localCheckpoint(eager=False)
-        valid = temporal_batch(deduped.filter(F.col("status") == "valid"))
-        merged = union_with_invalid(valid, deduped.filter(F.col("status") == "invalid"))
-    else:
-        merged = deduped
+    silver = validate_enrich(bronze)
+    deduped = first_occurrence_dedup(silver).localCheckpoint(eager=False)
+    valid = temporal_batch(deduped.filter(F.col("status") == "valid"))
+    merged = union_with_invalid(valid, deduped.filter(F.col("status") == "invalid"))
     return route(merged)

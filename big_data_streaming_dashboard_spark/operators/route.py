@@ -2,9 +2,9 @@
 
 The reference filters the final stream three times into three Kafka
 sinks (flink_process/flink_process.py:334-351). We compute ONE ``route``
-column and either filter per sink or, in streaming, write all three
-topics in a single ``foreachBatch`` pass over a persisted batch
-(streaming/sinks.py) -- the plan is evaluated once, not three times.
+column and, in streaming, write all three topics in a single
+``foreachBatch`` pass over a persisted batch (streaming/sinks.py) --
+the plan is evaluated once, not three times.
 """
 
 from __future__ import annotations
@@ -23,8 +23,3 @@ def route(silver: DataFrame) -> DataFrame:
         .when(F.col("critical"), "critical")
         .otherwise("normal"),
     )
-
-
-def split_routes(silver: DataFrame) -> dict[str, DataFrame]:
-    routed = route(silver)
-    return {name: routed.filter(F.col("route") == name) for name in ROUTES}

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import CONFIG
 from ..functions.keys import dedup_key
 from ..functions.levels import critical_flag, level3, level5
 from ..functions.timeparse import normalize_event_time
@@ -54,12 +54,12 @@ def _missing_any(df_cols: list[str]) -> Column:
 # py4j round trips, and a dozen queries build it per bench run. Column
 # objects are unresolved/immutable and safely reusable across selects;
 # the cache key carries the SparkContext id (a restarted context
-# invalidates JVM-side expression objects), the schema subset the tree
-# depends on, and the config repr.
+# invalidates JVM-side expression objects) and the schema subset the
+# tree depends on.
 _COLS_CACHE: dict = {}
 
 
-def validate_enrich(bronze: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+def validate_enrich(bronze: DataFrame) -> DataFrame:
     """Bronze (stringly) -> silver: status/error + enriched columns.
 
     Output columns: event_id (if present), status, error, timestamp
@@ -73,15 +73,14 @@ def validate_enrich(bronze: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> 
             for c in ("event_id", "ingestion_timestamp", *REQUIRED_FIELDS)
             if c in bronze.columns
         ),
-        repr(cfg),
     )
     cols = _COLS_CACHE.get(key)
     if cols is None:
-        cols = _COLS_CACHE[key] = _validator_columns(bronze.columns, cfg)
+        cols = _COLS_CACHE[key] = _validator_columns(bronze.columns)
     return bronze.select(*cols)
 
 
-def _validator_columns(bronze_columns: list[str], cfg: PipelineConfig) -> list[Column]:
+def _validator_columns(bronze_columns: list[str]) -> list[Column]:
     lat_d = F.col("latitude").try_cast("double")
     lon_d = F.col("longitude").try_cast("double")
     val_d = F.col("value").try_cast("double")
@@ -115,20 +114,19 @@ def _validator_columns(bronze_columns: list[str], cfg: PipelineConfig) -> list[C
         error.alias("error"),
         F.when(valid, F.col("captured_time")).alias("timestamp"),
         F.when(valid, normalize_event_time(F.col("captured_time"))).alias("event_time"),
-        F.when(valid, F.bround(lat_d, cfg.coord_decimals)).alias("lat"),
-        F.when(valid, F.bround(lon_d, cfg.coord_decimals)).alias("lon"),
+        F.when(valid, F.bround(lat_d, CONFIG.coord_decimals)).alias("lat"),
+        F.when(valid, F.bround(lon_d, CONFIG.coord_decimals)).alias("lon"),
         F.when(valid, rval).alias("value"),
         F.when(valid, F.lit("cpm")).alias("unit"),
-        F.when(valid, level3(rval, cfg)).alias("level"),
-        F.when(valid, level5(rval, cfg)).alias("level5"),
-        F.when(valid, critical_flag(rval, cfg)).alias("critical"),
+        F.when(valid, level3(rval)).alias("level"),
+        F.when(valid, level5(rval)).alias("level5"),
+        F.when(valid, critical_flag(rval)).alias("critical"),
         dedup_key(
             F.col("latitude"),
             F.col("longitude"),
             F.col("value"),
             F.col("captured_time"),
             F.col("unit"),
-            cfg,
         ).alias("dedup_key"),
         F.when(
             ~valid,

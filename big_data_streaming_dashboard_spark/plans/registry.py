@@ -188,9 +188,7 @@ def _deduped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "deduped",
         spark,
         sf_dir,
-        lambda: first_occurrence_dedup(
-            _silver(spark, sf_dir), "dedup_key", "event_id"
-        ).persist(),
+        lambda: first_occurrence_dedup(_silver(spark, sf_dir)).persist(),
     )
 
 

@@ -43,6 +43,10 @@ Scale notes (100 TB target):
   (about +400 ms on a ~1 s cycle, in 7 of 16 benchmark processes on a
   4-core VM). At 500 entries nothing is evicted and every process
   compiles 0 classes per steady-state refresh.
+- Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` when set (a deployment
+  setting), else half of physical memory capped at 16g. A fixed 16g
+  default is more than a 15 GB VM has: there the kernel OOM-killed the
+  test JVM at 15.4 GB RSS.
 - Arrow enabled so the deliberate Pandas-UDF islands (alert cooldown,
   multimodal decode) batch-transfer instead of pickling row-at-a-time.
 - Session timezone pinned UTC so event-time semantics match the DuckDB
@@ -58,6 +62,14 @@ from pyspark.sql import SparkSession
 
 def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+def driver_memory(env: str | None, phys_bytes: int) -> str:
+    """``spark.driver.memory``: ``env`` when set, else half of
+    ``phys_bytes`` (in MiB), capped at 16g."""
+    if env:
+        return env
+    return f"{min(16 * 1024, phys_bytes // 2 // 2**20)}m"
 
 
 def get_spark(
@@ -90,7 +102,13 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            driver_memory(
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM"),
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
+            ),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # the driver fixtures store events.ts as TIMESTAMP(NANOS), which the

@@ -111,7 +111,7 @@ def stream_kafka_bronze(
     return parse_kafka_json(reader.load())
 
 
-def read_playback_config(config_dir: str, default_speed: float = 1.0) -> float:
+def read_playback_config(config_dir: str) -> float:
     """S13: dynamic-config channel, effective semantics.
 
     The reference publishes {"playback_speed": x} to a Kafka config
@@ -125,7 +125,8 @@ def read_playback_config(config_dir: str, default_speed: float = 1.0) -> float:
 
     File-backed channel (one JSON doc per file, lexically-last file
     wins = latest message); the Kafka form would read the compacted
-    config topic's tail instead."""
+    config topic's tail instead. Speed 1.0 when the channel is empty or
+    unreadable."""
     import json
     import os
 
@@ -134,25 +135,21 @@ def read_playback_config(config_dir: str, default_speed: float = 1.0) -> float:
             f for f in os.listdir(config_dir) if f.endswith(".json")
         )
         if not files:
-            return default_speed
+            return 1.0
         with open(os.path.join(config_dir, files[-1])) as fh:
-            return float(json.load(fh).get("playback_speed", default_speed))
+            return float(json.load(fh).get("playback_speed", 1.0))
     except (OSError, ValueError):
-        return default_speed
+        return 1.0
 
 
 def stream_parquet_bronze_dynamic(
-    spark: SparkSession,
-    dir_path: str,
-    config_dir: str,
-    base_files_per_trigger: int = 1,
+    spark: SparkSession, dir_path: str, config_dir: str
 ) -> DataFrame:
     """File-source bronze replay whose throttle follows the config
-    channel: files-per-trigger = base * playback_speed (the
+    channel: files-per-trigger = playback_speed, at least 1 (the
     maxFilesPerTrigger analog of the reference's delay/speed). Restart
     the query to pick up a new speed (see read_playback_config)."""
-    speed = read_playback_config(config_dir)
-    files_per_trigger = max(1, int(base_files_per_trigger * speed))
+    files_per_trigger = max(1, int(read_playback_config(config_dir)))
     return (
         spark.readStream.schema(BRONZE_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", files_per_trigger)

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import CONFIG
 
 # escalation policy per severity level -- the kind of small dimension a
 # dashboard joins on every refresh (static side of stream-static join)
@@ -52,15 +52,10 @@ def cell_3dp(lat, lon):
     return F.format_string("%.3f,%.3f", lat, lon)
 
 
-def critical_context_stream(
-    silver_a: DataFrame,
-    silver_b: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    context_seconds: int = 10,
-) -> DataFrame:
+def critical_context_stream(silver_a: DataFrame, silver_b: DataFrame) -> DataFrame:
     """Stream-stream interval join: for every critical reading, the
-    valid readings in the SAME 3-dp cell within the preceding
-    ``context_seconds`` (inclusive of the critical instant).
+    valid readings in the SAME 3-dp cell within the preceding 10 s
+    (inclusive of the critical instant).
 
     Both inputs are silver streams. State stays bounded because the
     interval condition bounds reading.event_time in both directions
@@ -68,7 +63,7 @@ def critical_context_stream(
     buffered rows expire once the other side's watermark passes their
     interval. Inner join => append mode.
     """
-    wm = f"{cfg.watermark_seconds} seconds"
+    wm = f"{CONFIG.watermark_seconds} seconds"
     readings = (
         silver_a.filter(F.col("status") == "valid")
         .withWatermark("event_time", wm)
@@ -94,7 +89,7 @@ def critical_context_stream(
         & (F.col("reading_time") <= F.col("critical_time"))
         & (
             F.col("reading_time")
-            >= F.col("critical_time") - F.expr(f"INTERVAL {context_seconds} SECONDS")
+            >= F.col("critical_time") - F.expr("INTERVAL 10 SECONDS")
         ),
     ).select(
         "critical_id",

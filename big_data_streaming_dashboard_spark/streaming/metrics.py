@@ -24,11 +24,11 @@ from pyspark.sql import functions as F
 OBSERVATION_NAME = "ingest_metrics"
 
 
-def with_observed_metrics(df: DataFrame, name: str = OBSERVATION_NAME) -> DataFrame:
-    """Attach S8-style counters: total rows, valid/invalid split,
-    critical count, max ingestion timestamp."""
+def with_observed_metrics(df: DataFrame) -> DataFrame:
+    """Attach S8-style counters under ``OBSERVATION_NAME``: total rows,
+    valid/invalid split, critical count, max ingestion timestamp."""
     return df.observe(
-        name,
+        OBSERVATION_NAME,
         F.count(F.lit(1)).alias("n_rows"),
         F.count(F.when(F.col("status") == "valid", 1)).alias("n_valid"),
         F.count(F.when(F.col("status") == "invalid", 1)).alias("n_invalid"),

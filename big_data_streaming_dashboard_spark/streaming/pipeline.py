@@ -18,17 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import CONFIG
 from ..operators.validate import validate_enrich
 
 
-def silver_stream(
-    bronze: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    bounded_state: bool = True,
-) -> DataFrame:
+def silver_stream(bronze: DataFrame, bounded_state: bool = True) -> DataFrame:
     """bronze stream -> validated+deduped silver stream."""
-    silver = validate_enrich(bronze, cfg)
+    silver = validate_enrich(bronze)
     # dedup needs the watermark column when bounded; invalid rows have
     # null event_time so they are deduped on the shared invalid_key in
     # the unbounded mode (the reference's D1 quirk) -- in bounded mode
@@ -36,7 +32,7 @@ def silver_stream(
     if bounded_state:
         valid = (
             silver.filter(F.col("status") == "valid")
-            .withWatermark("event_time", f"{cfg.watermark_seconds} seconds")
+            .withWatermark("event_time", f"{CONFIG.watermark_seconds} seconds")
             .dropDuplicatesWithinWatermark(["dedup_key"])
         )
         invalid = silver.filter(F.col("status") == "invalid")
@@ -44,9 +40,7 @@ def silver_stream(
     return silver.dropDuplicates(["dedup_key"])
 
 
-def temporal_batch_stream_annotated(
-    silver: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
-) -> DataFrame:
+def temporal_batch_stream_annotated(silver: DataFrame) -> DataFrame:
     """Reference-faithful streaming W4: when the watermark closes a 1 s
     window, re-emit EVERY record annotated with its same-second batch
     size (flink_process/flink_process.py:23-54 collects the window then
@@ -63,9 +57,9 @@ def temporal_batch_stream_annotated(
     valid = silver.filter(F.col("status") == "valid")
     cols = [c for c in valid.columns]
     agg = (
-        valid.withWatermark("event_time", f"{cfg.watermark_seconds} seconds")
+        valid.withWatermark("event_time", f"{CONFIG.watermark_seconds} seconds")
         .groupBy(
-            F.window("event_time", f"{cfg.temporal_window_seconds} seconds"),
+            F.window("event_time", f"{CONFIG.temporal_window_seconds} seconds"),
             F.substring("timestamp", 1, 19).alias("timestamp_key"),
         )
         .agg(
@@ -86,11 +80,7 @@ def temporal_batch_stream_annotated(
     )
 
 
-def full_stream(
-    bronze: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    bounded_state: bool = False,
-) -> DataFrame:
+def full_stream(bronze: DataFrame) -> DataFrame:
     """The reference's complete dataflow as ONE streaming query:
     validate -> dedup -> temporal annotation (W4, watermark-gated) ->
     union with the invalid bypass (W5) -> route (F3/F4).
@@ -98,7 +88,8 @@ def full_stream(
     The union joins an aggregated (window-closed) branch with a plain
     append branch -- both append-mode, so the combined query stays
     append. Invalid rows flow through with null temporal columns,
-    exactly like the batch `operators/pipeline.batch_pipeline`.
+    exactly like the batch `operators/pipeline.batch_pipeline`. The
+    dedup is the reference's unbounded one (``bounded_state=False``).
 
     Known waste: ``silver`` feeds both branches, so the plan holds two
     ``dedupe`` state operators, each keeping every key it has seen
@@ -111,23 +102,19 @@ def full_stream(
     """
     from ..operators.route import route
 
-    silver = silver_stream(bronze, cfg, bounded_state=bounded_state)
-    annotated = temporal_batch_stream_annotated(silver, cfg)
+    silver = silver_stream(bronze, bounded_state=False)
+    annotated = temporal_batch_stream_annotated(silver)
     invalid = silver.filter(F.col("status") == "invalid")
     merged = annotated.unionByName(invalid, allowMissingColumns=True)
     return route(merged)
 
 
-def session_stream(
-    silver: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    gap_seconds: int = 3,
-) -> DataFrame:
+def session_stream(silver: DataFrame) -> DataFrame:
     """Activity bursts per severity level via streaming session_window.
 
     A session = consecutive valid readings of the same level with gaps
-    < ``gap_seconds``. The watermark closes a session once event time
-    moves past last_ts + gap + watermark; state per open session is one
+    < 3 s. The watermark closes a session once event time moves past
+    last_ts + gap + watermark; state per open session is one
     (start, end, count) triple -- bounded by the number of ACTIVE keys,
     not history, so it scales with key cardinality only. Batch-mode
     `session_window` (plans/relational2.session_window_events) is the
@@ -136,10 +123,10 @@ def session_stream(
     """
     valid = silver.filter(F.col("status") == "valid")
     return (
-        valid.withWatermark("event_time", f"{cfg.watermark_seconds} seconds")
+        valid.withWatermark("event_time", f"{CONFIG.watermark_seconds} seconds")
         .groupBy(
             "level",
-            F.session_window("event_time", f"{gap_seconds} seconds").alias("sw"),
+            F.session_window("event_time", "3 seconds").alias("sw"),
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(

@@ -29,7 +29,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import CONFIG
 from ..operators.analytics import recent_points, rolling_stats
 
 
@@ -42,11 +42,11 @@ def priority_tag(df: DataFrame) -> DataFrame:
     )
 
 
-def drop_heartbeats(df: DataFrame, type_col: str = "type") -> DataFrame:
+def drop_heartbeats(df: DataFrame) -> DataFrame:
     """F7: heartbeat messages discarded (useWebsocket.js:42-44)."""
-    if type_col not in df.columns:
+    if "type" not in df.columns:
         return df
-    return df.filter(F.col(type_col).isNull() | (F.col(type_col) != "heartbeat"))
+    return df.filter(F.col("type").isNull() | (F.col("type") != "heartbeat"))
 
 
 def client_sanity_filter(df: DataFrame) -> DataFrame:
@@ -68,8 +68,9 @@ class DashboardState:
     micro-batch. The driver-side footprint is O(retention cap).
     """
 
-    def __init__(self, cfg: PipelineConfig = DEFAULT_CONFIG) -> None:
-        self.cfg = cfg
+    cfg = CONFIG  # the fixed constants; readers check retention_points
+
+    def __init__(self) -> None:
         self.recent: list[dict[str, Any]] = []
         self.stats: dict[str, Any] = {}
         self.batches_seen = 0
@@ -91,9 +92,7 @@ class DashboardState:
             combined = valid.unionByName(
                 spark.createDataFrame(self.recent, self._schema)
             )
-        snap = recent_points(
-            combined, n=self.cfg.retention_points, tiebreak_col="event_id"
-        ).persist()
+        snap = recent_points(combined).persist()
         try:
             self.recent = [r.asDict() for r in snap.collect()]
             self.stats = rolling_stats(snap).collect()[0].asDict()

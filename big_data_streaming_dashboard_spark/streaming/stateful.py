@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import CONFIG
 
 _OUT_FIELDS = [
     ("cooldown_key", T.StringType()),
@@ -54,7 +54,8 @@ _COLS = [n for n, _ in _OUT_FIELDS]
 # by module path, and Spark's Python workers do not necessarily have
 # this repo on their PYTHONPATH (the driver imports __spark_entry__ by
 # file path) -- a module-level helper reference crashes the worker
-# with ModuleNotFoundError.
+# with ModuleNotFoundError. Constants such as the cooldown length are
+# read on the driver and passed in by value.
 
 
 def _make_scan(cooldown_s: float):
@@ -71,13 +72,11 @@ def _make_scan(cooldown_s: float):
     return scan
 
 
-def exact_cooldown_batch(
-    candidates: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
-) -> DataFrame:
+def exact_cooldown_batch(candidates: DataFrame) -> DataFrame:
     """Batch exact cooldown: first alert per key, then >= 30 s after the
     previous EMITTED alert (reference-faithful, unlike the bucketed
     approximation in operators/alerts.py)."""
-    scan = _make_scan(float(cfg.alert_cooldown_seconds))
+    scan = _make_scan(float(CONFIG.alert_cooldown_seconds))
     cols = list(_COLS)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -91,12 +90,10 @@ def exact_cooldown_batch(
     )
 
 
-def exact_cooldown_stream(
-    candidates: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
-) -> DataFrame:
+def exact_cooldown_stream(candidates: DataFrame) -> DataFrame:
     """Streaming exact cooldown: last-emit carried across micro-batches
     in the state store (applyInPandasWithState)."""
-    scan = _make_scan(float(cfg.alert_cooldown_seconds))
+    scan = _make_scan(float(CONFIG.alert_cooldown_seconds))
     cols = list(_COLS)
 
     def fn(

@@ -129,7 +129,7 @@ def test_dedup_first_occurrence_and_invalid_key_quirk(spark):
         (5, "2024-01-01 10:00:00", "def", "99.0", "1.0", "cpm", 0),
     ]
     silver = validate_enrich(_bronze(spark, rows))
-    got = first_occurrence_dedup(silver, "dedup_key", "event_id")
+    got = first_occurrence_dedup(silver)
     ids = sorted(r["event_id"] for r in got.collect())
     assert ids == [1, 3, 4]
 

@@ -86,8 +86,8 @@ def test_dedup_idempotent_and_minimal(spark, raw_rows):
     """dedup is idempotent; survivors have the min event_id of their
     key group; every key keeps exactly one row."""
     silver = validate_enrich(_bronze(spark, raw_rows))
-    once = first_occurrence_dedup(silver, "dedup_key", "event_id")
-    twice = first_occurrence_dedup(once, "dedup_key", "event_id")
+    once = first_occurrence_dedup(silver)
+    twice = first_occurrence_dedup(once)
     got_once = sorted(r["event_id"] for r in once.collect())
     got_twice = sorted(r["event_id"] for r in twice.collect())
     assert got_once == got_twice

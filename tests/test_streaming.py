@@ -64,9 +64,7 @@ def test_streaming_silver_matches_batch_dedup(spark, bronze_dir):
         stream_parquet_bronze(spark, bronze_dir), bounded_state=False
     )
     got = run_stream(spark, stream, f"t_{uuid.uuid4().hex[:8]}")
-    batch = first_occurrence_dedup(
-        validate_enrich(bronze_radiation(spark, SF)), "dedup_key", "event_id"
-    )
+    batch = first_occurrence_dedup(validate_enrich(bronze_radiation(spark, SF)))
     s_keys = sorted(r["dedup_key"] for r in got.select("dedup_key").collect())
     b_keys = sorted(r["dedup_key"] for r in batch.select("dedup_key").collect())
     assert s_keys == b_keys
@@ -89,7 +87,7 @@ def test_streaming_temporal_annotated_rows_match_batch(spark, bronze_dir):
     }
     batch = temporal_batch(
         first_occurrence_dedup(
-            validate_enrich(bronze_radiation(spark, SF)), "dedup_key", "event_id"
+            validate_enrich(bronze_radiation(spark, SF))
         ).filter((F.col("status") == "valid") & F.col("event_time").isNotNull())
     )
     b_rows = {
@@ -128,7 +126,7 @@ def test_streaming_temporal_counts_match_batch(spark, bronze_dir):
     # streaming can never window them; compare on the parseable subset
     batch = temporal_batch(
         first_occurrence_dedup(
-            validate_enrich(bronze_radiation(spark, SF)), "dedup_key", "event_id"
+            validate_enrich(bronze_radiation(spark, SF))
         ).filter((F.col("status") == "valid") & F.col("event_time").isNotNull())
     )
     b_counts = {
@@ -171,9 +169,7 @@ def test_foreach_batch_three_way_routing(spark, bronze_dir):
     from big_data_streaming_dashboard_spark.operators.route import route as batch_route
 
     batch = batch_route(
-        first_occurrence_dedup(
-            validate_enrich(bronze_radiation(spark, SF)), "dedup_key", "event_id"
-        )
+        first_occurrence_dedup(validate_enrich(bronze_radiation(spark, SF)))
     )
     expected = {
         r["route"]: r["n"]
@@ -420,7 +416,7 @@ def test_session_window_stream_matches_batch(spark, bronze_dir):
     assert len(s_sessions) > 0
 
     batch_silver = first_occurrence_dedup(
-        validate_enrich(bronze_radiation(spark, SF)), "dedup_key", "event_id"
+        validate_enrich(bronze_radiation(spark, SF))
     ).filter((F.col("status") == "valid") & F.col("event_time").isNotNull())
     batch = (
         batch_silver.groupBy(
@@ -777,9 +773,7 @@ def test_routed_sink_wire_contract(spark):
     from .conftest import SF_SMOKE
 
     bronze = bronze_radiation(spark, SF_SMOKE)
-    routed = route(
-        first_occurrence_dedup(validate_enrich(bronze), "dedup_key", "event_id")
-    )
+    routed = route(first_occurrence_dedup(validate_enrich(bronze)))
     wire = kafka_wire(routed)
     back = wire.select(
         F.col("key").cast("string").alias("kafka_key"),
@@ -848,9 +842,7 @@ def test_replay_epoch_downstream_dedup_restores_effective_once(spark, tmp_path):
     from .conftest import SF_SMOKE
 
     silver = first_occurrence_dedup(
-        validate_enrich(bronze_radiation(spark, SF_SMOKE)),
-        "dedup_key",
-        "event_id",
+        validate_enrich(bronze_radiation(spark, SF_SMOKE))
     ).persist()
     sink = tmp_path / "routed"
 
